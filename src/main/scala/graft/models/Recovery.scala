@@ -163,8 +163,8 @@ object Recovery {
 
   /** EGARCH(1,1) ω=−0.2 α=0.25 γ=−0.15 β=0.9 — certifies EGARCH.fitModel
     * (m41). Tolerances ≈3× the observed estimation error at n=8000
-    * (EgProbe: ω ±0.04, α ±0.016, γ ±0.025, β ±0.02 across seeds);
-    * the fitted likelihood must dominate the truth's and the
+    * (fits of seeds 101, 202 and 303: ω ±0.04, α ±0.016, γ ±0.025,
+    * β ±0.02); the fitted likelihood must dominate the truth's and the
     * add∘remove pair must round-trip to machine epsilon. */
   def egarchKernel(key: String, seed: Long): Seq[Check] = {
     val truth = EGARCHModel(omega = -0.2, alpha = 0.25, gamma = -0.15, beta = 0.9)

@@ -37,77 +37,15 @@ private[graft] object PlaneMatrix {
 }
 
 /**
- * Random-hyperplane LSH signature as a native codegen'd expression (r22):
- * one sign bit per plane packed in a LONG — the bucketing kernel of
- * lshTopK / embeddingNearDuplicates / semanticDecontaminate / the streaming
- * near-dup index. The scalar-UDF formulation boxed the whole vector into a
- * Seq[Double] per corpus row (VERDICT r21's allocation-pressure class);
- * this is one fused primitive loop over the (by-then unboxed) input array.
- * Arithmetic replicates the UDF bit-exactly: s = fold of v(i) * row(i) in
- * index order, bit set iff s > 0.
- */
-case class HyperplaneSignature(child: Expression, planes: Int, seed: Int)
-    extends UnaryExpression {
-  require(planes >= 1 && planes <= 63, s"need 1 <= planes <= 63, got $planes")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_signature"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_signature requires an ARRAY<DOUBLE|FLOAT> input, got $t")
-  }
-
-  @transient private lazy val pm = new PlaneMatrix(planes, seed)
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(input: Any): Any =
-    HyperplaneSignature.compute(input.asInstanceOf[ArrayData], pm, planes, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pmRef = ctx.addReferenceObj("planeMatrix", pm, classOf[PlaneMatrix].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.HyperplaneSignature.compute($a, $pmRef, $planes, $isFloat);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSignature =
-    copy(child = newChild)
-}
-
-object HyperplaneSignature {
-  /** Shared by interpreted eval and generated code (FLOAT widened per
-    * element, like [[DotProduct]] — no upstream cast-to-double copy). */
-  def compute(v: ArrayData, pm: PlaneMatrix, planes: Int, isFloat: Boolean): Long = {
-    val n = v.numElements()
-    val mat = pm.get(n)
-    var sig = 0L
-    var p = 0
-    while (p < planes) {
-      val row = mat(p)
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-        s += x * row(i); i += 1
-      }
-      if (s > 0) sig |= (1L << p)
-      p += 1
-    }
-    sig
-  }
-
-  def ofColumn(c: Column, planes: Int, seed: Int): Column =
-    GraftSqlBridge.column(HyperplaneSignature(GraftSqlBridge.expression(c), planes, seed))
-}
-
-/**
  * Banded hyperplane signatures (`bands` independent LONG signatures of
  * `planesPerBand` sign bits, disjoint plane families) as ONE native
- * expression — the AND-OR amplified LSH kernel. Same bit-exact arithmetic
- * as the UDF it replaces; output is an UNBOXED long array.
+ * expression — the AND-OR amplified LSH kernel of lshTopK (one band),
+ * embeddingNearDuplicates, semanticDecontaminate and the streaming
+ * near-dup index. The scalar-UDF formulation boxed the whole vector into a
+ * Seq[Double] per corpus row; this is one fused primitive loop over the
+ * unboxed input array. Arithmetic replicates the UDF bit-exactly: per
+ * plane, s = fold of v(i) * row(i) in index order, bit set iff s > 0.
+ * Output is an UNBOXED long array.
  */
 case class HyperplaneBandSignatures(child: Expression, bands: Int,
     planesPerBand: Int, seed: Int) extends UnaryExpression {

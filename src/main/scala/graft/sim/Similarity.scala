@@ -100,13 +100,11 @@ object Similarity {
   }
 
   /** Random-hyperplane signature: one sign bit per plane, packed in a LONG.
-    * Vectors with equal signatures land in the same LSH bucket.
-    * r22: the native codegen'd [[HyperplaneSignature]] expression — the
-    * scalar-UDF formulation boxed the vector into a Seq[Double] per corpus
-    * row; the expression replicates its arithmetic (and the shared
-    * [[PlaneMatrix]] values) bit-exactly. */
+    * Vectors with equal signatures land in the same LSH bucket. The single
+    * band of [[HyperplaneBandSignatures]]: a plane's components depend only
+    * on (plane, dim, seed), so the bits equal a one-band signature's. */
   def hyperplaneSignature(vec: Column, planes: Int, seed: Int = 7): Column =
-    HyperplaneSignature.ofColumn(vec, planes, seed)
+    HyperplaneBandSignatures.ofColumn(vec, 1, planes, seed).getItem(0)
 
   /**
    * Banded hyperplane signatures: `bands` independent signatures of

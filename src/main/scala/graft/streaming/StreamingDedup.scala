@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.text.{Dedup, TextFunctions}
+import graft.text.{Dedup, Lsh, TextFunctions}
 
 /**
  * Streaming deduplication for document ingest pipelines — the streaming
@@ -71,14 +71,25 @@ object StreamingDedup {
    */
   def corpusEmbeddingBuckets(corpus: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", bands: Int = 8, planesPerBand: Int = 8,
-      seed: Int = 7): DataFrame = {
-    val v = graft.sim.Similarity.normalized(col(vecCol))
-    corpus.select(col(idCol).as("corpus_id"), v.as("corpus_vec"))
-      .withColumn("__sigs", graft.sim.Similarity.hyperplaneBandSignatures(
-        col("corpus_vec"), bands, planesPerBand, seed))
-      .select(col("corpus_id"), col("corpus_vec"),
-        posexplode(col("__sigs")).as(Seq("band", "bucket")))
-  }
+      seed: Int = 7): DataFrame =
+    Lsh.hyperplaneBands(corpus.select(col(idCol).as("corpus_id"),
+        graft.sim.Similarity.normalized(col(vecCol)).as("corpus_vec")),
+      "corpus_vec", bands, planesPerBand, seed)
+
+  /** Stream rows joined to every [[corpusEmbeddingBuckets]] row that shares
+    * a band bucket and reaches `threshold` exact cosine (columns stream_id,
+    * tsCol, corpus_id, cosine among others) — the body the embedding
+    * near-dup and decontamination streams share up to their watermark. */
+  private def embeddingMatches(stream: DataFrame, corpusBk: DataFrame,
+      idCol: String, vecCol: String, tsCol: String, threshold: Double,
+      bands: Int, planesPerBand: Int, seed: Int): DataFrame =
+    Lsh.hyperplaneBands(stream.select(col(idCol).as("stream_id"),
+        graft.sim.Similarity.normalized(col(vecCol)).as("stream_vec"), col(tsCol)),
+      "stream_vec", bands, planesPerBand, seed)
+      .join(corpusBk, Lsh.BandKey)
+      .withColumn("cosine",
+        graft.sim.Similarity.dot(col("stream_vec"), col("corpus_vec")))
+      .filter(col("cosine") >= threshold)
 
   /**
    * Near-duplicate pairs between an embedding STREAM and a static corpus —
@@ -94,22 +105,13 @@ object StreamingDedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       tsCol: String = "event_time", watermark: String = "10 minutes",
       threshold: Double = 0.95, bands: Int = 8, planesPerBand: Int = 8,
-      seed: Int = 7): DataFrame = {
-    val v = graft.sim.Similarity.normalized(col(vecCol))
-    stream.select(col(idCol).as("stream_id"), v.as("stream_vec"), col(tsCol))
-      .withColumn("__sigs", graft.sim.Similarity.hyperplaneBandSignatures(
-        col("stream_vec"), bands, planesPerBand, seed))
-      .select(col("stream_id"), col("stream_vec"), col(tsCol),
-        posexplode(col("__sigs")).as(Seq("band", "bucket")))
-      .join(corpusBk, Seq("band", "bucket"))
-      .withColumn("cosine",
-        graft.sim.Similarity.dot(col("stream_vec"), col("corpus_vec")))
-      .filter(col("cosine") >= threshold)
+      seed: Int = 7): DataFrame =
+    embeddingMatches(stream, corpusBk, idCol, vecCol, tsCol, threshold, bands,
+        planesPerBand, seed)
       .select(col("stream_id"), col("corpus_id"), col(tsCol),
         round(col("cosine"), 6).as("cosine"))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("stream_id", "corpus_id")
-  }
 
   /**
    * Streaming semantic decontamination: flag every incoming vector whose
@@ -125,45 +127,30 @@ object StreamingDedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       tsCol: String = "event_time", watermark: String = "10 minutes",
       threshold: Double = 0.9, bands: Int = 8, planesPerBand: Int = 8,
-      seed: Int = 7): DataFrame = {
-    // inlined rather than layered on streamingEmbeddingNearDup: the id-only
-    // collapse needs its own dropDuplicatesWithinWatermark key, and a second
-    // withWatermark on the same column is disallowed mid-plan
-    val v = graft.sim.Similarity.normalized(col(vecCol))
-    stream.select(col(idCol).as("contaminated_id"), v.as("stream_vec"), col(tsCol))
-      .withColumn("__sigs", graft.sim.Similarity.hyperplaneBandSignatures(
-        col("stream_vec"), bands, planesPerBand, seed))
-      .select(col("contaminated_id"), col("stream_vec"), col(tsCol),
-        posexplode(col("__sigs")).as(Seq("band", "bucket")))
-      .join(holdoutBk, Seq("band", "bucket"))
-      .withColumn("__c",
-        graft.sim.Similarity.dot(col("stream_vec"), col("corpus_vec")))
-      .filter(col("__c") >= threshold)
-      .select(col("contaminated_id"), col(tsCol))
+      seed: Int = 7): DataFrame =
+    // not layered on streamingEmbeddingNearDup: the id-only collapse needs
+    // its own dropDuplicatesWithinWatermark key, and a second withWatermark
+    // on the same column is disallowed mid-plan
+    embeddingMatches(stream, holdoutBk, idCol, vecCol, tsCol, threshold, bands,
+        planesPerBand, seed)
+      .select(col("stream_id").as("contaminated_id"), col(tsCol))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("contaminated_id")
-  }
 
   /**
    * Pre-compute the reference corpus's minhash band buckets — the static
    * side of [[streamingNearDupAgainstCorpus]]. At scale this is written
    * once (ideally bucketed by (band, bucket)) and reused by every stream.
+   * `bands` must lie in [1, numHashes]; the trailing numHashes % bands
+   * signature values are unused.
    */
   def corpusBuckets(corpus: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): DataFrame = {
-    val sig = Dedup.minhashSignatureFromText(col(textCol), k, numHashes)
-    val rowsPerBand = numHashes / bands
-    // r22: static unroll of the banding transform (see Dedup.bandBuckets) —
-    // bit-identical buckets, whole-stage codegen instead of an interpreted
-    // lambda per band per row
-    corpus.select(col(idCol).as("corpus_id"), col(textCol).as("corpus_text"),
-        sig.as("__sig"))
-      .select(col("corpus_id"), col("corpus_text"), posexplode(
-        array((0 until bands).map(b =>
-          hash(slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-      ).as(Seq("band", "bucket")))
-  }
+      bands: Int = 16): DataFrame =
+    Lsh.minhashBands(corpus.select(col(idCol).as("corpus_id"),
+        col(textCol).as("corpus_text"),
+        Dedup.minhashSignatureFromText(col(textCol), k, numHashes).as("__sig")),
+      "__sig", numHashes, bands, col("corpus_id"), col("corpus_text"))
 
   /**
    * Near-duplicate pairs between a document stream and a static corpus:
@@ -177,15 +164,10 @@ object StreamingDedup {
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
     val sig = Dedup.minhashSignatureFromText(col(textCol), k, numHashes)
-    val rowsPerBand = numHashes / bands
-    // r22: static banding unroll (see Dedup.bandBuckets) — bit-identical
-    val banded = stream.select(col(idCol).as("stream_id"),
-        col(textCol).as("stream_text"), col(tsCol), sig.as("__sig"))
-      .select(col("stream_id"), col("stream_text"), col(tsCol), posexplode(
-        array((0 until bands).map(b =>
-          hash(slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand))): _*)
-      ).as(Seq("band", "bucket")))
-    banded.join(corpusBk, Seq("band", "bucket"))
+    val banded = Lsh.minhashBands(stream.select(col(idCol).as("stream_id"),
+        col(textCol).as("stream_text"), col(tsCol), sig.as("__sig")),
+      "__sig", numHashes, bands, col("stream_id"), col("stream_text"), col(tsCol))
+    banded.join(corpusBk, Lsh.BandKey)
       .withColumn("jaccard", Dedup.jaccard(
         Dedup.shingles(col("stream_text"), k),
         Dedup.shingles(col("corpus_text"), k)))
@@ -216,20 +198,13 @@ object StreamingDedup {
       tsCol: String = "event_time", watermark: String = "10 minutes",
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // r22: static banding unroll (see Dedup.bandBuckets) — bit-identical
-    def bandedOf(sigCol: Column) = posexplode(
-      array((0 until bands).map(b =>
-        hash(slice(sigCol, b * rowsPerBand + 1, rowsPerBand))): _*))
-    val idxBk = index.select(col("id").as("corpus_id"),
-      bandedOf(col("sig")).as(Seq("band", "bucket")))
+    val idxBk = Lsh.minhashBands(index, "sig", numHashes, bands, col("id").as("corpus_id"))
     val sig = Dedup.minhashSignatureFromText(col(textCol), k, numHashes)
-    val banded = stream.select(col(idCol).as("stream_id"),
+    val banded = Lsh.minhashBands(stream.select(col(idCol).as("stream_id"),
         graft.text.HashedWordShingles.ofColumn(col(textCol), k).as("__stream_sh"),
-        col(tsCol), sig.as("__sig"))
-      .select(col("stream_id"), col("__stream_sh"), col(tsCol),
-        bandedOf(col("__sig")).as(Seq("band", "bucket")))
-    banded.join(idxBk, Seq("band", "bucket"))
+        col(tsCol), sig.as("__sig")),
+      "__sig", numHashes, bands, col("stream_id"), col("__stream_sh"), col(tsCol))
+    banded.join(idxBk, Lsh.BandKey)
       .join(index.select(col("id").as("corpus_id"), col("sh").as("__corpus_sh")),
         Seq("corpus_id"))
       .withColumn("jaccard", graft.text.JaccardSortedLongs.ofColumns(

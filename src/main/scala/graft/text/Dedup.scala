@@ -87,42 +87,6 @@ object Dedup {
     // the same seeded stream, so signatures are bit-identical (spec-pinned)
     MinhashSignatureFromText.ofColumn(textCol, k, numHashes, seed)
 
-  /**
-   * MinHash-LSH candidate pairs: band the signature, bucket-join on
-   * (band index, band hash), emit distinct (id_a < id_b) pairs.
-   */
-  /** (id, band, bucket) rows from a signature column — the LSH banding step
-    * shared by the full and incremental pipelines. Identical inputs produce
-    * identical buckets (builtin `hash`, fixed seed), which is what makes
-    * [[incrementalMinhashNearDuplicates]] exactly equivalent to the full
-    * pipeline restricted to pairs touching the batch. */
-  private def bandBuckets(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int): DataFrame = {
-    val rowsPerBand = expr(s"size($sigCol) div $bands")
-    // r22: `bands` is a compile-time constant, so the per-row
-    // transform(sequence(0, bands-1), ...) — CodegenFallback, one
-    // interpreted lambda per band per row — unrolls to a STATIC
-    // array(hash(slice...), ...) of builtin codegen'd expressions.
-    // Same hash of the same slices: buckets bit-identical.
-    df.select(col(idCol).as("id"), posexplode(
-      array((0 until bands).map(b =>
-        hash(slice(col(sigCol), lit(b) * rowsPerBand + 1, rowsPerBand))): _*)
-    ).as(Seq("band", "bucket")))
-  }
-
-  def minhashCandidates(df: DataFrame, idCol: String, sigCol: String,
-      bands: Int): DataFrame = {
-    // NOTE: no persist here — the a/b sides are identical subplans, so
-    // Spark's ReuseExchange computes the signature stage once already
-    val banded = bandBuckets(df, idCol, sigCol, bands)
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
   /** Exact Jaccard similarity of two distinct-element arrays; null (not an
     * ANSI throw) when both are empty. */
   def jaccard(a: Column, b: Column): Column =
@@ -131,7 +95,9 @@ object Dedup {
 
   /**
    * Full MinHash near-dup pipeline: shingle → sign → band → candidates →
-   * verify with exact Jaccard ≥ threshold.
+   * verify with exact Jaccard ≥ threshold. `bands` must lie in
+   * [1, numHashes]; each band hashes numHashes / bands signature values and
+   * the trailing numHashes % bands are unused.
    */
   def minhashNearDuplicates(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -142,7 +108,7 @@ object Dedup {
     val base = spread(df).select(col(idCol).as("id"), col(textCol).as("__text"))
     val withSig = base.withColumn("sig",
       minhashSignatureFromText(col("__text"), k, numHashes))
-    val cands = minhashCandidates(withSig.select(col("id"), col("sig")), "id", "sig", bands)
+    val cands = Lsh.minhashCandidates(withSig, "id", "sig", numHashes, bands)
     val candIds = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id"))).distinct()
     // no broadcast hint: the candidate-id set is bounded only by the corpus'
@@ -190,7 +156,9 @@ object Dedup {
    * equality is structural, not approximate (same seeded signatures, same
    * banding hash, same exact-Jaccard verify; a spec asserts it). Output:
    * (id_a = batch doc, id_b = index or batch doc, jaccard, from_index).
-   * Batch ids must be disjoint from index ids (the caller's id scheme).
+   * Batch ids must be disjoint from index ids (the caller's id scheme), and
+   * `numHashes` must be the one the index was built with; `bands` follows
+   * [[minhashNearDuplicates]]'s rule.
    *
    * Scale shape: the corpus appears ONLY as one scan of the index (banded
    * bucket rows + a semi-joined shingle fetch for candidate ids) — there is
@@ -203,17 +171,14 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id", k: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.7): DataFrame = {
     val batchIdx = minhashIndex(batch, textCol, idCol, k, numHashes)
-    val newB = bandBuckets(batchIdx, "id", "sig", bands)
-    val oldB = bandBuckets(index, "id", "sig", bands).withColumn("is_new", lit(false))
+    def banded(idx: DataFrame) = Lsh.minhashBands(idx, "sig", numHashes, bands, col("id"))
+    val newB = banded(batchIdx)
+    val oldB = banded(index).withColumn("is_new", lit(false))
     // batch buckets probe (index ∪ batch) buckets; within-batch pairs are
     // oriented a < b so each is emitted once, like the full pipeline
     val both = oldB.union(newB.withColumn("is_new", lit(true)))
-    val cands = newB.as("a").join(both.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          (!col("b.is_new") || col("a.id") < col("b.id")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        (!col("b.is_new")).as("from_index"))
-      .distinct()
+    val cands = Lsh.candidates(newB, both, !col("b.is_new") || col("a.id") < col("b.id"),
+      col("a.id").as("id_a"), col("b.id").as("id_b"), (!col("b.is_new")).as("from_index"))
     // ship shingles for candidate ids only (cf. minhashNearDuplicates: no
     // broadcast hint — candidate count is corpus-dup-rate-bound)
     val shA = batchIdx.select(col("id").as("id_a"), col("sh").as("sh_a"))
@@ -552,17 +517,8 @@ object Dedup {
       idCol: String = "doc_id", maxHamming: Int = 3): DataFrame = {
     val sigs = spread(df)
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-    val chunks = array((0 until 4).map(b =>
-      shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL))): _*)
-    val banded = sigs.select(col("id"), col("sig"),
-      posexplode(chunks).as(Seq("band", "chunk")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .distinct()
+    val banded = Lsh.explode(sigs, Lsh.simhashBandKeys(col("sig")), col("id"), col("sig"))
+    Lsh.selfCandidates(banded, "sig")
       .withColumn("hamming", hamming(col("sig_a"), col("sig_b")))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
@@ -571,57 +527,8 @@ object Dedup {
   // ---------------------------------------------------------------- embedding near-dup
 
   /**
-   * Embedding-cosine near-duplicate pairs above a similarity threshold.
-   * Candidate generation via BANDED random-hyperplane LSH (see
-   * [[graft.sim.Similarity.hyperplaneBandSignatures]]): `bands` independent
-   * bucket tables of `planesPerBand` sign bits, joined per band exactly like
-   * MinHash banding — within-bucket pair counts stay ~n²/(bands·2^r) per band
-   * instead of one wide bucket's n²/2^r, and recall for pairs at cosine c
-   * compounds to 1-(1-(1-θ(c)/π)^r)^b. Verification is exact cosine on the
-   * distinct candidate pairs only.
-   */
-  /**
-   * Resolve the banded-hyperplane LSH shape for a corpus of `n` vectors:
-   * planes from bucket occupancy (planesPerBand <= 0 → max(8,
-   * ⌈log2(n/8)⌉)), bands from the recall budget (bands <= 0 → smallest b
-   * with 1 − (1 − s'^planes)^b ≥ the (8 planes, 8 bands) baseline at
-   * `threshold`, capped at 64). Warns on stderr whenever the resolved
-   * shape's per-pair recall falls >1% below the baseline — a pinned
-   * `bands` under auto-raised planes, or the 64-band cap binding.
-   */
-  private[graft] def embeddingLshConfig(n: Long, threshold: Double,
-      bands: Int, planesPerBand: Int, warn: Boolean = false): (Int, Int) = {
-    val planes =
-      if (planesPerBand > 0) planesPerBand
-      else math.max(8, math.ceil(math.log(n / 8.0) / math.log(2.0)).toInt)
-    val sPrime = 1.0 - math.acos(math.min(1.0, math.max(-1.0, threshold))) / math.Pi
-    def recallAt(p: Int, b: Int): Double = 1.0 - math.pow(1.0 - math.pow(sPrime, p), b)
-    val resolvedBands =
-      if (bands > 0) bands
-      else if (planes <= 8) 8
-      else {
-        // bands preserving the (8 planes, 8 bands) recall at `threshold`:
-        // b = ln(1 − R0) / ln(1 − s'^planes), R0 = 1 − (1 − s'^8)^8
-        val needed = 8.0 * math.log1p(-math.pow(sPrime, 8)) /
-          math.log1p(-math.pow(sPrime, planes))
-        math.min(64, math.max(8, math.ceil(needed).toInt))
-      }
-    val eff = recallAt(planes, resolvedBands)
-    val base = recallAt(8, if (bands > 0) bands else 8)
-    if (warn && eff < base - 0.01)
-      System.err.println(f"[graft] embeddingNearDuplicates: per-pair recall at " +
-        f"cosine=$threshold%.2f is ~$eff%.3f with planes=$planes/bands=$resolvedBands " +
-        f"(8-plane baseline ~$base%.3f)" + (if (bands > 0 && planesPerBand <= 0)
-        " — bands is pinned while planes auto-scaled with the corpus; pass " +
-        "bands=0 to re-budget recall automatically" else
-        " — the 64-band cap binds at this threshold/corpus size; raise " +
-        "planesPerBand deliberately or accept the reduced recall"))
-    (planes, resolvedBands)
-  }
-
-  /**
    * Inspectable resolution of [[embeddingNearDuplicates]]'s LSH shape
-   * (r20, VERDICT r19 #10): the same [[embeddingLshConfig]] the operator
+   * (r20, VERDICT r19 #10): the same [[Lsh.embeddingLshConfig]] the operator
    * calls, surfaced as a one-row DataFrame a Python or SQL caller can
    * read BEFORE paying for the join — (n_vectors, planes_per_band,
    * bands, buckets_per_band, effective_recall, baseline_recall).
@@ -643,18 +550,30 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     val n = math.max(1L, spread(df).count())
-    val (planes, resolvedBands) =
-      embeddingLshConfig(n, threshold, bands, planesPerBand)
-    val sPrime = 1.0 - math.acos(math.min(1.0, math.max(-1.0, threshold))) / math.Pi
-    def recallAt(p: Int, b: Int): Double =
-      1.0 - math.pow(1.0 - math.pow(sPrime, p), b)
-    Seq((n, planes, resolvedBands, 1L << planes,
-        recallAt(planes, resolvedBands),
-        recallAt(8, if (bands > 0) bands else 8)))
+    val c = Lsh.embeddingLshConfig(n, threshold, bands, planesPerBand)
+    Seq((n, c.planes, c.bands, 1L << c.planes, c.recall, c.baselineRecall))
       .toDF("n_vectors", "planes_per_band", "bands", "buckets_per_band",
         "effective_recall", "baseline_recall")
   }
 
+  /** (id, v = normalized vector, __sigs = hyperplane band keys), checkpointed:
+    * the embedding operators read it for banding AND for exact verification. */
+  private[graft] def embeddingSigTable(df: DataFrame, idCol: String, vecCol: String,
+      bands: Int, planesPerBand: Int, seed: Int): DataFrame = spread(df)
+    .select(col(idCol).as("id"), graft.sim.Similarity.normalized(col(vecCol)).as("v"))
+    .withColumn("__sigs", Lsh.hyperplaneBandKeys(col("v"), bands, planesPerBand, seed))
+    .localCheckpoint()
+
+  /**
+   * Embedding-cosine near-duplicate pairs above a similarity threshold.
+   * Candidate generation via BANDED random-hyperplane LSH (see
+   * [[graft.sim.Similarity.hyperplaneBandSignatures]]): `bands` independent
+   * bucket tables of `planesPerBand` sign bits, joined per band exactly like
+   * MinHash banding — within-bucket pair counts stay ~n²/(bands·2^r) per band
+   * instead of one wide bucket's n²/2^r, and recall for pairs at cosine c
+   * compounds to 1-(1-(1-θ(c)/π)^r)^b. Verification is exact cosine on the
+   * distinct candidate pairs only.
+   */
   def embeddingNearDuplicates(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", threshold: Double = 0.95,
       bands: Int = 0, planesPerBand: Int = 0, seed: Int = 7): DataFrame = {
@@ -675,25 +594,13 @@ object Dedup {
     // (8, 8) for n ≤ 2048 — every certification artifact (dd17 digest,
     // rc06, GoldenSpec CSVs) is unchanged by the defaults.
     val n = if (planesPerBand > 0) 1L else math.max(1L, spread(df).count())
-    val (planes, resolvedBands) =
-      embeddingLshConfig(n, threshold, bands, planesPerBand, warn = true)
+    val shape = Lsh.embeddingLshConfig(n, threshold, bands, planesPerBand, warn = true)
     // the signature table fans out FOUR ways below (both sides of the
     // band self-join + both vector re-joins); materialize it once —
     // n×(bands+dim) values, executor-resident — instead of re-running the
     // normalize + bands×planes hyperplane dots four times per execution
-    val sigs = spread(df)
-      .select(col(idCol).as("id"),
-        graft.sim.Similarity.normalized(col(vecCol)).as("v"))
-      .withColumn("__sigs", graft.sim.Similarity.hyperplaneBandSignatures(
-        col("v"), resolvedBands, planes, seed))
-      .localCheckpoint()
-    val banded = sigs.select(col("id"), posexplode(col("__sigs")).as(Seq("band", "bucket")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val cands = a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    val sigs = embeddingSigTable(df, idCol, vecCol, shape.bands, shape.planes, seed)
+    val cands = Lsh.selfCandidates(Lsh.explode(sigs, col("__sigs"), col("id")))
     val vecs = sigs.select(col("id"), col("v"))
     cands
       .join(vecs.withColumnRenamed("id", "id_a").withColumnRenamed("v", "v_a"), "id_a")
@@ -723,19 +630,11 @@ object Dedup {
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.9, bands: Int = 8, planesPerBand: Int = 8,
       seed: Int = 7): DataFrame = {
-    def sigTable(df: DataFrame) = spread(df)
-      .select(col(idCol).as("id"),
-        graft.sim.Similarity.normalized(col(vecCol)).as("v"))
-      .withColumn("__sigs", graft.sim.Similarity.hyperplaneBandSignatures(
-        col("v"), bands, planesPerBand, seed))
-      .localCheckpoint()
-    val cs = sigTable(corpus)
-    val hs = sigTable(holdout)
-    val cb = cs.select(col("id"), posexplode(col("__sigs")).as(Seq("band", "bucket")))
-    val hb = hs.select(col("id").as("hid"),
-      posexplode(col("__sigs")).as(Seq("band", "bucket")))
-    val cands = cb.join(hb, Seq("band", "bucket"))
-      .select(col("id"), col("hid")).distinct()
+    val cs = embeddingSigTable(corpus, idCol, vecCol, bands, planesPerBand, seed)
+    val hs = embeddingSigTable(holdout, idCol, vecCol, bands, planesPerBand, seed)
+    val cands = Lsh.candidates(Lsh.explode(cs, col("__sigs"), col("id")),
+      Lsh.explode(hs, col("__sigs"), col("id").as("hid")), lit(true),
+      col("a.id"), col("b.hid"))
     val contaminated = cands
       .join(cs.select(col("id"), col("v")), "id")
       .join(hs.select(col("id").as("hid"), col("v").as("hv")), "hid")

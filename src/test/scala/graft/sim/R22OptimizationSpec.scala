@@ -73,6 +73,7 @@ class R22OptimizationSpec extends AnyFunSuite {
   // --- hyperplane signatures: native expression vs the old scalar UDF -----
 
   test("HyperplaneSignature matches the scalar-UDF formulation bit-exactly") {
+    // hyperplaneSignature is the one-band HyperplaneBandSignatures kernel
     for (planes <- Seq(1, 12, 63); seed <- Seq(7, 13)) {
       val got = vecDf(testVecs)
         .select(col("id"), Similarity.hyperplaneSignature(col("v"), planes, seed))
@@ -135,7 +136,9 @@ class R22OptimizationSpec extends AnyFunSuite {
   test("NearestCentroid / NearestCentroids match the UDF's stable tie order") {
     val bc = spark.sparkContext.broadcast(centers)
     val vecs = Seq(1L -> Array(0.9, 0.1), 2L -> Array(0.0, 0.0),
-      3L -> Array(-0.5, -0.5), 4L -> Array(0.5, 0.5))
+      3L -> Array(-0.5, -0.5), 4L -> Array(0.5, 0.5),
+      5L -> Array(Double.NaN, 0.0), // every distance NaN
+      6L -> Array(1e200, 1e200))    // every distance overflows to +Inf
     val df = vecDf(vecs)
     for (np <- 1 to 4) {
       val got = df.select(col("id"),
@@ -281,8 +284,7 @@ class R22OptimizationSpec extends AnyFunSuite {
     val rowsPerBand = expr(s"size(sig) div $bands")
     val old = transform(sequence(lit(0), lit(bands - 1)),
       b => hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-    val neu = array((0 until bands).map(b =>
-      hash(slice(col("sig"), lit(b) * rowsPerBand + 1, rowsPerBand))): _*)
+    val neu = graft.text.Lsh.minhashBandKeys(col("sig"), 64, bands)
     df.select(old.as("o"), neu.as("n")).collect().foreach { r =>
       assert(r.getSeq[Int](0) == r.getSeq[Int](1))
     }

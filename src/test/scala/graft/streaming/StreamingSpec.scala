@@ -658,6 +658,37 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTestSession {
     } finally query.stop()
   }
 
+  test("stream and static banding agree: corpus bucket rows equal the batch band rows") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(5)
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta")
+    val docs = ((1L to 40L).map(i => i ->
+        Seq.fill(3 + rnd.nextInt(12))(words(rnd.nextInt(words.size))).mkString(" ")) ++
+      Seq(41L -> "", 42L -> "one")).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // (2, 30, 7) leaves two trailing hashes outside every band
+    for ((k, numHashes, bands) <- Seq((3, 64, 16), (2, 30, 7))) {
+      val stream = rows(StreamingDedup.corpusBuckets(docs, k = k,
+          numHashes = numHashes, bands = bands).select("corpus_id", "band", "bucket"))
+      val batch = rows(graft.text.Lsh.minhashBands(
+        graft.text.Dedup.minhashIndex(docs, k = k, numHashes = numHashes),
+        "sig", numHashes, bands, col("id")))
+      stream.size shouldBe 42 * bands
+      stream shouldBe batch
+    }
+    val vecs = (1L to 30L).map(i => i -> Seq.fill(8)(rnd.nextGaussian()))
+      .toDF("vec_id", "embedding")
+    for ((bands, planes, seed) <- Seq((8, 8, 7), (3, 12, 13))) {
+      val stream = rows(StreamingDedup.corpusEmbeddingBuckets(vecs, bands = bands,
+          planesPerBand = planes, seed = seed).select("corpus_id", "band", "bucket"))
+      val batch = rows(graft.text.Lsh.explode(graft.text.Dedup.embeddingSigTable(
+        vecs, "vec_id", "embedding", bands, planes, seed), col("__sigs"), col("id")))
+      stream.size shouldBe 30 * bands
+      stream shouldBe batch
+    }
+  }
+
   /** Batch-side expectation: EventOps.sessions keyed by (key, session_start_us). */
   private def EventOps_sessions(events: Seq[(String, Timestamp, Double)])
       : Map[(String, Long), (Long, Double)] = {

@@ -258,19 +258,24 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkTestSession {
   test("embeddingLshConfig re-budgets bands when planes auto-scale (ADVICE r17)") {
     val sP = 1.0 - math.acos(0.95) / math.Pi
     def recall(pl: Int, bd: Int) = 1 - math.pow(1 - math.pow(sP, pl), bd)
+    def config(n: Long, bands: Int, planes: Int) = {
+      val c = Lsh.embeddingLshConfig(n, 0.95, bands, planes)
+      c.recall shouldBe recall(c.planes, c.bands)
+      (c.planes, c.bands)
+    }
     // cert scales resolve to exactly (8, 8) — frozen artifacts unchanged
-    Dedup.embeddingLshConfig(2000, 0.95, 0, 0) shouldBe ((8, 8))
+    config(2000, 0, 0) shouldBe ((8, 8))
     // 200k corpus: planes rise with occupancy; bands must rise too so the
     // per-pair recall at the threshold holds the (8, 8) baseline instead
     // of silently dropping (~0.99 -> ~0.84 at fixed 8 bands)
-    val (p, b) = Dedup.embeddingLshConfig(200000, 0.95, 0, 0)
+    val (p, b) = config(200000, 0, 0)
     p shouldBe 15
     b should be > 8
     recall(p, b) should be >= recall(8, 8) - 1e-9
     // pinned bands under auto planes: shape honored (stderr warning path)
-    Dedup.embeddingLshConfig(200000, 0.95, 8, 0) shouldBe ((15, 8))
+    config(200000, 8, 0) shouldBe ((15, 8))
     // pinned planes + auto bands: budget honored without a corpus count
-    val (p2, b2) = Dedup.embeddingLshConfig(1, 0.95, 0, 12)
+    val (p2, b2) = config(1, 0, 12)
     p2 shouldBe 12
     recall(p2, b2) should be >= recall(8, 8) - 1e-9
   }

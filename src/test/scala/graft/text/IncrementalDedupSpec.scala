@@ -58,6 +58,25 @@ class IncrementalDedupSpec extends AnyFunSuite with Matchers with SparkTestSessi
     inc.count(!_._2) should be >= 2  // batch×batch
   }
 
+  test("minhash banding rejects bands outside [1, numHashes] when the operator is built") {
+    val index = Dedup.minhashIndex(corpus.filter(col("doc_id") < 10))
+    val batch = corpus.filter(col("doc_id") >= 10)
+    def builds(bands: Int): Seq[() => Any] = Seq(
+      () => Dedup.minhashNearDuplicates(corpus, numHashes = 64, bands = bands),
+      () => Dedup.incrementalMinhashNearDuplicates(batch, index, numHashes = 64,
+        bands = bands),
+      () => graft.streaming.StreamingDedup.corpusBuckets(corpus, numHashes = 64,
+        bands = bands))
+    // 0 used to fail planning with a bare DIVIDE_BY_ZERO; 65 gave every band
+    // an empty slice, one shared bucket and an all-pairs candidate join
+    for (bands <- Seq(0, -1, 65); build <- builds(bands)) {
+      val e = intercept[IllegalArgumentException](build())
+      e.getMessage should include(s"got bands = $bands")
+      e.getMessage should include("numHashes = 64")
+    }
+    builds(64).foreach(build => build()) // one hash per band is legal
+  }
+
   test("exactIncremental: index dup, within-batch dup, and fresh doc") {
     val s = spark
     import s.implicits._
