@@ -3,7 +3,6 @@ package graft.api.java
 import java.{lang => jl, util => ju}
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 import graft.core.DateTimeIndex
 import graft.models.ModelOps
@@ -26,17 +25,6 @@ object JavaTimeSeriesOps {
     case "center" => RollAlign.Center
     case "right" => RollAlign.Right
     case other => throw new IllegalArgumentException(s"no such alignment: $other")
-  }
-
-  private def aggOf(name: String): Column => Column = name.toLowerCase match {
-    case "sum" => sum(_)
-    case "mean" | "avg" => avg(_)
-    case "min" => min(_)
-    case "max" => max(_)
-    case "count" => count(_)
-    case "first" => first(_)
-    case "last" => last(_)
-    case other => throw new IllegalArgumentException(s"no such aggregate: $other")
   }
 
   def lags(df: DataFrame, maxLag: Int, trim: Boolean,
@@ -112,11 +100,12 @@ object JavaTimeSeriesOps {
     TS.autocorr(df, s.toSeq, key, ts, value)
   }
 
-  /** aggregate: sum|mean|min|max|count|first|last. */
+  /** aggregate: sum|mean|min|max|count|first|last, picked exactly as the
+    * Scala and Python by-name overloads pick it. */
   def resample(df: DataFrame, widthNanos: Long, aggregate: String,
       closedRight: Boolean, stampRight: Boolean, originNanos: Long,
       key: String, ts: String, value: String): DataFrame =
-    TS.resample(df, widthNanos, aggOf(aggregate), closedRight, stampRight,
+    TS.resample(df, widthNanos, aggregate, closedRight, stampRight,
       originNanos, key, ts, value)
 
   /** fillMethod may be null for no fill. */

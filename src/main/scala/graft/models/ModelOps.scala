@@ -108,10 +108,7 @@ object ModelOps {
       try {
       val m = ARIMA.fitModel(p, d, q, arr)
       val fc = m.forecast(arr, h).takeRight(h)
-      val step = if (tss.length > 1) {
-        val steps = tss.sliding(2).map(w => w(1) - w(0)).toArray.sorted
-        steps(steps.length / 2)
-      } else 1L
+      val step = medianStep(tss)
       val lastTs = tss.last
       fc.zipWithIndex.map { case (v, i) =>
         ForecastPoint(k, i + 1, lastTs + step * (i + 1), v)

@@ -2,9 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.text.{Dedup, RollingHash, TextFunctions, WinnowingMins}
+import graft.sim.DotProduct
+import graft.text.{Dedup, HashedWordShingles, JaccardSortedLongs, RollingHash, TextFunctions,
+  UncoveredTokens, WinnowingMins}
 
 /**
  * Session extension entry point (the `SparkSessionExtensions` registration
@@ -12,105 +14,71 @@ import graft.text.{Dedup, RollingHash, TextFunctions, WinnowingMins}
  * functions into the SQL registry so pure-SQL users (and the Python/Java
  * surfaces, via `spark.sql`) can run the text/dedup/similarity pipeline:
  *
- *   rolling_hash(text)            — custom codegen'd Catalyst expression
+ *   rolling_hash(text)            — 64-bit polynomial rolling hash
+ *   dot_product(a, b)             — dot product of two numeric arrays
+ *   winnowing_mins(text, k, w)    — winnowing window minima
  *   canonical_fingerprint(text)   — md5 of canonicalized text
  *   bpeish_token_count(text)      — BPE-ish subword count
  *   simhash64(text)               — 64-bit SimHash
  *   hamming64(a, b)               — Hamming distance of two 64-bit signatures
  *   cosine_similarity(a, b)       — cosine of two double arrays
- *   hashed_word_shingles(text, k) — sorted 64-bit k-shingle hashes (r18)
- *   jaccard_sorted_longs(a, b)    — linear-merge Jaccard of sorted arrays (r18)
- *   uncovered_tokens(toks, st, k) — span-removal rebuild (r18)
+ *   hashed_word_shingles(text, k) — sorted 64-bit k-shingle hashes
+ *   jaccard_sorted_longs(a, b)    — linear-merge Jaccard of sorted arrays
+ *   uncovered_tokens(toks, st, k) — span-removal rebuild
  *
- * All but rolling_hash are composed from the Column API and rewritten to
- * expressions through GraftSqlBridge — no parallel SQL implementations to
- * keep in sync.
+ * The six kernel functions build their native expression directly (integer
+ * arguments must be literals); the rest are composed from the Column API and
+ * rewritten to expressions through GraftSqlBridge — no parallel SQL
+ * implementations to keep in sync.
  *
  * Usage: SparkSession.builder().withExtensions(new GraftExtensions) ... or
  * spark.sql.extensions=graft.plans.GraftExtensions.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def inject(e: SparkSessionExtensions, name: String, arity: Int)
-      (build: Seq[Column] => Column): Unit =
+  /** Registers SQL function `name` over exactly `arity` argument expressions. */
+  private def register(e: SparkSessionExtensions, name: String, arity: Int,
+      cls: Class[_])(build: Seq[Expression] => Expression): Unit =
     e.injectFunction((
       new FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GraftExtensions].getName, name),
+      new ExpressionInfo(cls.getName, name),
       (children: Seq[Expression]) => {
         require(children.length == arity,
           s"$name takes exactly $arity argument(s)")
-        GraftSqlBridge.analyzableExpression(build(children.map(GraftSqlBridge.column)))
+        build(children)
       }))
 
+  /** A function composed from the Column API. */
+  private def inject(e: SparkSessionExtensions, name: String, arity: Int)
+      (build: Seq[Column] => Column): Unit =
+    register(e, name, arity, classOf[GraftExtensions])(children =>
+      GraftSqlBridge.analyzableExpression(build(children.map(GraftSqlBridge.column))))
+
+  /** A native kernel; `intLit` reads its integer-literal arguments. */
+  private def kernel(e: SparkSessionExtensions, name: String, arity: Int,
+      cls: Class[_ <: Expression])(build: (Seq[Expression], Expression => Int) => Expression)
+      : Unit =
+    register(e, name, arity, cls)(children => build(children, {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$name: integer arguments must be literals, got $other")
+    }))
+
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "rolling_hash takes exactly one argument")
-        RollingHash(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[graft.sim.DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "dot_product takes exactly two arguments")
-        graft.sim.DotProduct(children(0), children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("winnowing_mins"),
-      new ExpressionInfo(classOf[WinnowingMins].getName, "winnowing_mins"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "winnowing_mins takes (text, k, w); k and w must be int literals")
-        val Seq(kExpr, wExpr) = children.drop(1)
-        def intLit(ex: Expression, what: String): Int = ex match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"winnowing_mins $what must be an integer literal, got $other")
-        }
-        WinnowingMins(children.head, intLit(kExpr, "k"), intLit(wExpr, "w"))
-      }))
-    // r18: the hashed-shingle near-dup verify primitives as SQL functions
-    // (sorted 64-bit shingle hashes + linear-merge Jaccard + span rebuild)
-    e.injectFunction((
-      new FunctionIdentifier("hashed_word_shingles"),
-      new ExpressionInfo(classOf[graft.text.HashedWordShingles].getName,
-        "hashed_word_shingles"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "hashed_word_shingles takes (text, k); k must be an int literal")
-        graft.text.HashedWordShingles(children.head,
-          intLit(children(1), "hashed_word_shingles k"))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("jaccard_sorted_longs"),
-      new ExpressionInfo(classOf[graft.text.JaccardSortedLongs].getName,
-        "jaccard_sorted_longs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "jaccard_sorted_longs takes two sorted arrays")
-        graft.text.JaccardSortedLongs(children(0), children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("uncovered_tokens"),
-      new ExpressionInfo(classOf[graft.text.UncoveredTokens].getName,
-        "uncovered_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "uncovered_tokens takes (tokens, sorted_starts, k); k must be an int literal")
-        graft.text.UncoveredTokens(children(0), children(1),
-          intLit(children(2), "uncovered_tokens k"))
-      }))
+    kernel(e, "rolling_hash", 1, classOf[RollingHash])((c, _) => RollingHash(c(0)))
+    kernel(e, "dot_product", 2, classOf[DotProduct])((c, _) => DotProduct(c(0), c(1)))
+    kernel(e, "winnowing_mins", 3, classOf[WinnowingMins])((c, intLit) =>
+      WinnowingMins(c(0), intLit(c(1)), intLit(c(2))))
+    kernel(e, "hashed_word_shingles", 2, classOf[HashedWordShingles])((c, intLit) =>
+      HashedWordShingles(c(0), intLit(c(1))))
+    kernel(e, "jaccard_sorted_longs", 2, classOf[JaccardSortedLongs])((c, _) =>
+      JaccardSortedLongs(c(0), c(1)))
+    kernel(e, "uncovered_tokens", 3, classOf[UncoveredTokens])((c, intLit) =>
+      UncoveredTokens(c(0), c(1), intLit(c(2))))
     inject(e, "canonical_fingerprint", 1)(c => TextFunctions.canonicalFingerprint(c.head))
     inject(e, "bpeish_token_count", 1)(c => TextFunctions.bpeishTokenCount(c.head))
     inject(e, "simhash64", 1)(c => Dedup.simhash(c.head))
     inject(e, "hamming64", 2)(c => Dedup.hamming(c(0), c(1)))
     inject(e, "cosine_similarity", 2)(c => graft.sim.Similarity.cosine(c(0), c(1)))
-  }
-
-  private def intLit(ex: Expression, what: String): Int = ex match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
   }
 }

@@ -2,11 +2,11 @@ package graft.sim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
+import graft.plans.{BinaryKernel, KernelInput, UnaryKernel}
 
 /**
  * Native dot product of two numeric arrays with whole-stage codegen —
@@ -22,36 +22,31 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
  * Null elements contribute 0. The sum runs over the shorter length if the
  * arrays disagree (same as zip_with's null-padding followed by +0 fold).
  */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression) extends BinaryKernel {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
+  override protected def inputKinds: Seq[KernelInput] =
+    Seq(KernelInput.Vector, KernelInput.Vector)
+  override protected def constants: Seq[Any] =
+    Seq(KernelInput.isFloat(left.dataType), KernelInput.isFloat(right.dataType))
 
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      KernelInput.isFloat(left.dataType), KernelInput.isFloat(right.dataType))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product requires ARRAY<DOUBLE|FLOAT> inputs, got " +
-        s"${left.dataType} and ${right.dataType}")
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DotProduct = copy(left = newLeft, right = newRight)
+}
 
-  private def isFloat(t: DataType): Boolean =
-    t.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object DotProduct {
+  def compute(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
-    val xf = isFloat(left.dataType)
-    val yf = isFloat(right.dataType)
     var s = 0.0
     var i = 0
     while (i < n) {
       if (!x.isNullAt(i) && !y.isNullAt(i)) {
-        val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-        val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
+        val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+        val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
         s += xv * yv
       }
       i += 1
@@ -59,38 +54,13 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xGet = if (isFloat(left.dataType)) "getFloat" else "getDouble"
-    val yGet = if (isFloat(right.dataType)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += ((double) $x.$xGet($i)) * ((double) $y.$yGet($i));
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DotProduct = copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
   def ofColumns(a: Column, b: Column): Column =
     GraftSqlBridge.column(DotProduct(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }
 
 /**
- * Native L2 normalization of a numeric array (r21) — the other interpreted
+ * Native L2 normalization of a numeric array — the other interpreted
  * hot spot of the embedding family. `Similarity.normalized` was a chain of
  * higher-order functions (`transform` cast → `aggregate` square-sum →
  * conditional `transform` divide), ALL CodegenFallback: interpreted lambda
@@ -107,69 +77,29 @@ object DotProduct {
  *   any NULL element ⇒ the old aggregate went NULL ⇒ every output element
  *   NULL (array of the same length); NULL input ⇒ NULL output.
  */
-case class NormalizedVector(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class NormalizedVector(child: Expression) extends UnaryKernel {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def prettyName: String = "normalized_vector"
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Vector)
+  override protected def constants: Seq[Any] = Seq(KernelInput.isFloat(child.dataType))
 
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"normalized_vector requires an ARRAY<DOUBLE|FLOAT> input, got ${child.dataType}")
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  // r22: the double[] branch returns UnsafeArrayData.fromPrimitiveArray —
-  // the GenericArrayData(double[]) ctor boxes every element into Object[]
-  // (one boxed Double per dimension per corpus row on the engine's hottest
-  // path; VERDICT r21 #2). Values are bit-identical; only the container
-  // representation changes. The all-null branch (NULL element poisoned the
-  // fold) keeps GenericArrayData — unsafe arrays can't carry null slots.
-  override protected def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val out = NormalizedVector.compute(a, isFloat)
-    if (out == null)
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        new Array[Any](a.numElements()))
-    else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out")
-      s"""
-         |double[] $out = graft.sim.NormalizedVector.compute($a, $isFloat);
-         |if ($out == null) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    new Object[$a.numElements()]);
-         |} else {
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(input: Any): Any =
+    NormalizedVector.compute(input.asInstanceOf[ArrayData],
+      KernelInput.isFloat(child.dataType))
 
   override protected def withNewChildInternal(newChild: Expression): NormalizedVector =
     copy(child = newChild)
 }
 
 object NormalizedVector {
-  /** Shared kernel; returns null for "every element NULL" (a NULL element
-    * poisoned the old aggregate's fold — the caller emits an all-null
-    * array of the input's length). */
-  def compute(a: ArrayData, isFloat: Boolean): Array[Double] = {
+  /** An unsafe primitive array, or — when a NULL element poisoned the old
+    * aggregate's fold — a generic all-null array of the input's length. */
+  def compute(a: ArrayData, isFloat: Boolean): ArrayData = {
     val n = a.numElements()
     val d = new Array[Double](n)
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i)) return null
+      if (a.isNullAt(i)) return new GenericArrayData(new Array[Any](n))
       d(i) = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
       i += 1
     }
@@ -177,10 +107,11 @@ object NormalizedVector {
     i = 0
     while (i < n) { acc += d(i) * d(i); i += 1 }
     val nrm = math.sqrt(acc)
-    if (nrm == 0.0) return d
-    i = 0
-    while (i < n) { d(i) = d(i) / nrm; i += 1 }
-    d
+    if (nrm != 0.0) {
+      i = 0
+      while (i < n) { d(i) = d(i) / nrm; i += 1 }
+    }
+    UnsafeArrayData.fromPrimitiveArray(d)
   }
 
   def ofColumn(a: Column): Column =

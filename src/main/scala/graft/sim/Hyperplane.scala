@@ -2,22 +2,20 @@ package graft.sim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 import scala.util.hashing.MurmurHash3
 
+import graft.plans.{KernelInput, UnaryKernel}
+
 /**
  * Deterministic pseudo-random hyperplane component matrix, lazily built once
- * per JVM per expression instance (r22 — hoisted out of [[Similarity]] so the
- * native signature expressions below can share it; the values are IDENTICAL
- * to the r01-r21 UDF's: MurmurHash3.productHash((plane, dim, seed)) mapped to
- * [-1, 1)). @transient: the matrix is deterministic from (planes, seed), so
- * executors rebuild it locally instead of shipping ~planes x dims doubles in
- * every task closure.
+ * per JVM per expression instance: MurmurHash3.productHash((plane, dim,
+ * seed)) mapped to [-1, 1), the values of the UDF it replaced. @transient:
+ * the matrix is deterministic from (planes, seed), so executors rebuild it
+ * locally instead of shipping ~planes x dims doubles in every task closure.
  */
 private[graft] class PlaneMatrix(planes: Int, seed: Int) extends Serializable {
   @transient private var mat: Array[Array[Double]] = _
@@ -48,43 +46,28 @@ private[graft] object PlaneMatrix {
  * Output is an UNBOXED long array.
  */
 case class HyperplaneBandSignatures(child: Expression, bands: Int,
-    planesPerBand: Int, seed: Int) extends UnaryExpression {
+    planesPerBand: Int, seed: Int) extends UnaryKernel {
   require(bands >= 1, s"need bands >= 1, got $bands")
   require(planesPerBand >= 1 && planesPerBand <= 63,
     s"need 1 <= planesPerBand <= 63, got $planesPerBand")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hyperplane_band_signatures"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_band_signatures requires an ARRAY<DOUBLE|FLOAT> input, got $t")
-  }
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Vector)
 
   @transient private lazy val pm = new PlaneMatrix(bands * planesPerBand, seed)
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override protected def constants: Seq[Any] =
+    Seq(pm, bands, planesPerBand, KernelInput.isFloat(child.dataType))
 
   override protected def nullSafeEval(input: Any): Any =
-    HyperplaneBandSignatures.compute(
-      input.asInstanceOf[ArrayData], pm, bands, planesPerBand, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pmRef = ctx.addReferenceObj("planeMatrix", pm, classOf[PlaneMatrix].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.HyperplaneBandSignatures.compute(" +
-        s"$a, $pmRef, $bands, $planesPerBand, $isFloat);")
-  }
+    HyperplaneBandSignatures.compute(input.asInstanceOf[ArrayData], pm, bands,
+      planesPerBand, KernelInput.isFloat(child.dataType))
 
   override protected def withNewChildInternal(
       newChild: Expression): HyperplaneBandSignatures = copy(child = newChild)
 }
 
 object HyperplaneBandSignatures {
-  /** Shared by interpreted eval and generated code (FLOAT widened per
-    * element, like [[DotProduct]]). */
+  /** FLOAT widened per element, like [[DotProduct]]. */
   def compute(v: ArrayData, pm: PlaneMatrix, bands: Int,
       planesPerBand: Int, isFloat: Boolean): ArrayData = {
     val n = v.numElements()

@@ -3,27 +3,28 @@ package graft.sim
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
+import graft.plans.{KernelInput, UnaryKernel}
+
 /**
- * Native codegen'd quantizer kernels (r22) — the corpus-scan halves of IVF,
+ * Native codegen'd quantizer kernels — the corpus-scan halves of IVF,
  * PQ and SemDeDup as Catalyst expressions instead of scalar UDFs. The UDF
  * formulations boxed every vector into a Seq[Double] (and every code array
- * into a Seq[Int]) per corpus row — the allocation-pressure class VERDICT
- * r21 #2 flags — and showed up as opaque `UDF` nodes that defeat column
- * pruning reasoning in the plan. Each expression here holds the trained
- * model (centroids / codebooks / LUTs) via the SAME jvm Broadcast the UDF
- * closures captured, so task closures stay small at any model size; the
- * arithmetic replicates the UDFs bit-exactly (fold order, strict-< argmin
- * ties to the lowest index, stable (distance, index) ordering for top-n).
+ * into a Seq[Int]) per corpus row, and showed up as opaque `UDF` nodes
+ * that defeat column pruning reasoning in the plan. Each expression here
+ * holds the trained model (centroids / codebooks / LUTs) via the SAME jvm
+ * Broadcast the UDF closures captured, so task closures stay small at any
+ * model size; the arithmetic replicates the UDFs bit-exactly (fold order,
+ * strict-< argmin ties to the lowest index, stable (distance, index)
+ * ordering for top-n).
  *
  * Inputs are the engine's normalized ARRAY<DOUBLE> vectors (what every
  * caller passes); NULL input rows yield NULL (the UDF path never saw one —
- * fixtures are non-null — so no declared result can differ).
+ * fixtures are non-null — so no declared result can differ). Each kernel's
+ * `compute` reads its broadcast model and calls the matching scan here.
  */
 object Quantizers {
 
@@ -144,40 +145,27 @@ object Quantizers {
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  private[sim] def requireDoubleArray(t: DataType, who: String): TypeCheckResult =
-    t match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$who requires an ARRAY<DOUBLE> input, got $other")
-    }
 }
 
 /** Nearest-centroid cell id (INT) — the IVF corpus-assignment scan. */
 case class NearestCentroid(child: Expression,
-    bc: Broadcast[Array[Array[Double]]]) extends UnaryExpression {
+    bc: Broadcast[Array[Array[Double]]]) extends UnaryKernel {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Quantizers.requireDoubleArray(child.dataType, prettyName)
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Doubles)
+  override protected def constants: Seq[Any] = Seq(bc)
 
   override protected def nullSafeEval(input: Any): Any =
-    Quantizers.nearestCell(input.asInstanceOf[ArrayData], bc.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("centroids", bc,
-      classOf[Broadcast[Array[Array[Double]]]].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.Quantizers.nearestCell(" +
-        s"$a, (double[][]) $bcRef.value());")
-  }
+    NearestCentroid.compute(input.asInstanceOf[ArrayData], bc)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
 }
 
 object NearestCentroid {
+  def compute(v: ArrayData, bc: Broadcast[Array[Array[Double]]]): Int =
+    Quantizers.nearestCell(v, bc.value)
+
   def ofColumn(c: Column, bc: Broadcast[Array[Array[Double]]]): Column =
     GraftSqlBridge.column(NearestCentroid(GraftSqlBridge.expression(c), bc))
 }
@@ -185,60 +173,48 @@ object NearestCentroid {
 /** The nprobe nearest centroid ids (ARRAY<INT>) — multi-probe assignment
   * (SemDeDup) and query-side IVF probes. */
 case class NearestCentroids(child: Expression,
-    bc: Broadcast[Array[Array[Double]]], nprobe: Int) extends UnaryExpression {
+    bc: Broadcast[Array[Array[Double]]], nprobe: Int) extends UnaryKernel {
   require(nprobe >= 1, s"need nprobe >= 1, got $nprobe")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Quantizers.requireDoubleArray(child.dataType, prettyName)
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Doubles)
+  override protected def constants: Seq[Any] = Seq(bc, nprobe)
 
   override protected def nullSafeEval(input: Any): Any =
-    Quantizers.nearestCells(input.asInstanceOf[ArrayData], bc.value, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("centroids", bc,
-      classOf[Broadcast[Array[Array[Double]]]].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.Quantizers.nearestCells(" +
-        s"$a, (double[][]) $bcRef.value(), $nprobe);")
-  }
+    NearestCentroids.compute(input.asInstanceOf[ArrayData], bc, nprobe)
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
 }
 
 object NearestCentroids {
+  def compute(v: ArrayData, bc: Broadcast[Array[Array[Double]]], nprobe: Int): ArrayData =
+    Quantizers.nearestCells(v, bc.value, nprobe)
+
   def ofColumn(c: Column, bc: Broadcast[Array[Array[Double]]], nprobe: Int): Column =
     GraftSqlBridge.column(NearestCentroids(GraftSqlBridge.expression(c), bc, nprobe))
 }
 
 /** PQ code array (ARRAY<INT>) of a vector — the PQ corpus-encode scan. */
 case class PqEncode(child: Expression,
-    bc: Broadcast[Array[Array[Array[Double]]]], sub: Int) extends UnaryExpression {
+    bc: Broadcast[Array[Array[Array[Double]]]], sub: Int) extends UnaryKernel {
   require(sub >= 1, s"need sub >= 1, got $sub")
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Quantizers.requireDoubleArray(child.dataType, prettyName)
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Doubles)
+  override protected def constants: Seq[Any] = Seq(bc, sub)
 
   override protected def nullSafeEval(input: Any): Any =
-    Quantizers.pqEncode(input.asInstanceOf[ArrayData], bc.value, sub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("codebooks", bc,
-      classOf[Broadcast[Array[Array[Array[Double]]]]].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.Quantizers.pqEncode(" +
-        s"$a, (double[][][]) $bcRef.value(), $sub);")
-  }
+    PqEncode.compute(input.asInstanceOf[ArrayData], bc, sub)
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
 }
 
 object PqEncode {
+  def compute(v: ArrayData, bc: Broadcast[Array[Array[Array[Double]]]],
+      sub: Int): ArrayData = Quantizers.pqEncode(v, bc.value, sub)
+
   def ofColumn(c: Column, bc: Broadcast[Array[Array[Array[Double]]]], sub: Int): Column =
     GraftSqlBridge.column(PqEncode(GraftSqlBridge.expression(c), bc, sub))
 }
@@ -246,30 +222,24 @@ object PqEncode {
 /** Per-query ADC lookup table (ARRAY<DOUBLE>, m×codebookSize). */
 case class PqLut(child: Expression,
     bc: Broadcast[Array[Array[Array[Double]]]], sub: Int, codebookSize: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(sub >= 1 && codebookSize >= 1, "need sub >= 1 and codebookSize >= 1")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_lut"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Quantizers.requireDoubleArray(child.dataType, prettyName)
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Doubles)
+  override protected def constants: Seq[Any] = Seq(bc, sub, codebookSize)
 
   override protected def nullSafeEval(input: Any): Any =
-    Quantizers.pqLut(input.asInstanceOf[ArrayData], bc.value, sub, codebookSize)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("codebooks", bc,
-      classOf[Broadcast[Array[Array[Array[Double]]]]].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.Quantizers.pqLut(" +
-        s"$a, (double[][][]) $bcRef.value(), $sub, $codebookSize);")
-  }
+    PqLut.compute(input.asInstanceOf[ArrayData], bc, sub, codebookSize)
 
   override protected def withNewChildInternal(newChild: Expression): PqLut =
     copy(child = newChild)
 }
 
 object PqLut {
+  def compute(v: ArrayData, bc: Broadcast[Array[Array[Array[Double]]]], sub: Int,
+      codebookSize: Int): ArrayData = Quantizers.pqLut(v, bc.value, sub, codebookSize)
+
   def ofColumn(c: Column, bc: Broadcast[Array[Array[Array[Double]]]],
       sub: Int, codebookSize: Int): Column =
     GraftSqlBridge.column(PqLut(GraftSqlBridge.expression(c), bc, sub, codebookSize))
@@ -278,33 +248,24 @@ object PqLut {
 /** Per-row approximate scores against every query LUT (ARRAY<DOUBLE>) —
   * the PQ ADC scan (input: the row's ARRAY<INT> code column). */
 case class PqScores(child: Expression, bc: Broadcast[Array[Array[Double]]],
-    m: Int, codebookSize: Int) extends UnaryExpression {
+    m: Int, codebookSize: Int) extends UnaryKernel {
   require(m >= 1 && codebookSize >= 1, "need m >= 1 and codebookSize >= 1")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_scores"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_scores requires an ARRAY<INT> code input, got $t")
-  }
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Ints)
+  override protected def constants: Seq[Any] = Seq(bc, m, codebookSize)
 
   override protected def nullSafeEval(input: Any): Any =
-    Quantizers.pqScores(input.asInstanceOf[ArrayData], bc.value, m, codebookSize)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("luts", bc,
-      classOf[Broadcast[Array[Array[Double]]]].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.sim.Quantizers.pqScores(" +
-        s"$a, (double[][]) $bcRef.value(), $m, $codebookSize);")
-  }
+    PqScores.compute(input.asInstanceOf[ArrayData], bc, m, codebookSize)
 
   override protected def withNewChildInternal(newChild: Expression): PqScores =
     copy(child = newChild)
 }
 
 object PqScores {
+  def compute(codes: ArrayData, bc: Broadcast[Array[Array[Double]]], m: Int,
+      codebookSize: Int): ArrayData = Quantizers.pqScores(codes, bc.value, m, codebookSize)
+
   def ofColumn(c: Column, bc: Broadcast[Array[Array[Double]]],
       m: Int, codebookSize: Int): Column =
     GraftSqlBridge.column(PqScores(GraftSqlBridge.expression(c), bc, m, codebookSize))

@@ -2,64 +2,54 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.util.hashing.MurmurHash3
 
+import graft.plans.{KernelInput, UnaryKernel}
+
 /**
  * MinHash signature straight from the text as a native codegen'd expression
- * (r22) — the dd-block's core per-document kernel (dd03/dd15/dd23, rc04,
+ * — the dd-block's core per-document kernel (dd03/dd15/dd23, rc04,
  * the minhash index, every streaming near-dup path). Shingle hashes are
  * combined from per-token murmur hashes, so no shingle strings are ever
  * materialized; signature = numHashes multiply-add-mask permutation minima.
  *
  * The scalar-UDF formulation it replaces paid a udf adapter round trip per
- * row and boxed the 64-long signature per document (the VERDICT r21 #2
- * allocation class). Arithmetic is IDENTICAL, byte for byte: same
- * `String.split(' ')` tokenization, same `MurmurHash3.stringHash` token
- * hashes, same base-combination fold and same (a·base + b) & Long.MaxValue
- * family drawn from the same seeded java.util.Random stream — signatures
- * are bit-identical (spec-pinned against the UDF body).
+ * row and boxed the 64-long signature per document. Arithmetic is
+ * IDENTICAL, byte for byte: same `String.split(' ')` tokenization, same
+ * `MurmurHash3.stringHash` token hashes, same base-combination fold and
+ * same (a·base + b) & Long.MaxValue family drawn from the same seeded
+ * java.util.Random stream — signatures are bit-identical (spec-pinned
+ * against the UDF body).
  */
 case class MinhashSignatureFromText(child: Expression, k: Int, numHashes: Int,
-    seed: Int) extends UnaryExpression {
+    seed: Int) extends UnaryKernel {
   require(k >= 1 && numHashes >= 1, "need k >= 1 and numHashes >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash_signature requires a string column, got ${child.dataType}")
-
+  // the (as, bs) coefficient pair is deterministic from (numHashes, seed);
+  // generated code gets the materialized arrays once per class
   @transient private lazy val coeffs =
     MinhashSignatureFromText.coeffs(numHashes, seed)
+  override protected def constants: Seq[Any] = Seq(coeffs, k, numHashes)
 
   override protected def nullSafeEval(input: Any): Any =
     MinhashSignatureFromText.compute(
       input.asInstanceOf[UTF8String], coeffs, k, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the (as, bs) coefficient pair is deterministic from (numHashes, seed);
-    // ship the materialized arrays once per generated class
-    val cRef = ctx.addReferenceObj("minhashCoeffs", coeffs, "long[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.MinhashSignatureFromText.compute(" +
-        s"$c, (long[][]) $cRef, $k, $numHashes);")
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): MinhashSignatureFromText = copy(child = newChild)
 }
 
 object MinhashSignatureFromText {
-  /** Same draw order as the r01-r21 UDF closure: `as` consumes the first
+  /** Same draw order as the UDF closure it replaced: `as` consumes the first
     * numHashes nextLong()s (forced odd), `bs` the next numHashes. */
   def coeffs(numHashes: Int, seed: Int): Array[Array[Long]] = {
     val rng = new java.util.Random(seed)

@@ -2,12 +2,12 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{KernelInput, UnaryKernel}
 
 /**
  * Gopher-style n-gram repetition signals per document (Rae et al. 2021,
@@ -39,22 +39,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * empties kept); character counts are Unicode codepoints (DuckDB
  * `length`). Documents shorter than n tokens score 0.0 for that n.
  */
-case class NgramRepetition(child: Expression) extends UnaryExpression {
+case class NgramRepetition(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "ngram_repetition"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ngram_repetition requires a string column, got ${child.dataType}")
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
 
   override protected def nullSafeEval(input: Any): Any =
     NgramRepetition.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.NgramRepetition.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): NgramRepetition =
     copy(child = newChild)
@@ -82,8 +74,8 @@ object NgramRepetition {
     var slot = 2
     TopNs.foreach { n => out(slot) = topFrac(toks, lens, totalChars, n); slot += 1 }
     DupNs.foreach { n => out(slot) = dupFrac(toks, lens, totalChars, n); slot += 1 }
-    // r22: unboxed container — GenericArrayData(double[]) boxes per element
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    // unboxed container — GenericArrayData(double[]) boxes per element
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   private def gramAt(toks: Array[String], i: Int, n: Int): String = {

@@ -1,12 +1,13 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{KernelInput, UnaryKernel}
 
 /**
  * 64-bit polynomial rolling hash of a string column — document
@@ -16,36 +17,13 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * hash = Σ byte_i · B^(n-1-i)  (mod 2^64), B = 1000000007.
  */
-case class RollingHash(child: Expression) extends UnaryExpression {
+case class RollingHash(child: Expression) extends UnaryKernel {
   override def dataType: DataType = LongType
   override def prettyName: String = "rolling_hash"
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash requires a string column, got ${child.dataType}")
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      h = h * RollingHash.Base + (bytes(i) & 0xff)
-      i += 1
-    }
-    h
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |byte[] ${ev.value}_bytes = $c.getBytes();
-         |long ${ev.value}_h = 0L;
-         |for (int ${ev.value}_i = 0; ${ev.value}_i < ${ev.value}_bytes.length; ${ev.value}_i++) {
-         |  ${ev.value}_h = ${ev.value}_h * ${RollingHash.Base}L + (${ev.value}_bytes[${ev.value}_i] & 0xff);
-         |}
-         |${ev.value} = ${ev.value}_h;
-       """.stripMargin)
+  override protected def nullSafeEval(input: Any): Any =
+    RollingHash.compute(input.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
@@ -53,6 +31,18 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 
 object RollingHash {
   val Base = 1000000007L
+
+  def compute(text: UTF8String): Long = {
+    val bytes = text.getBytes
+    var h = 0L
+    var i = 0
+    while (i < bytes.length) {
+      h = h * Base + (bytes(i) & 0xff)
+      i += 1
+    }
+    h
+  }
+
   def ofColumn(c: Column): Column =
     GraftSqlBridge.column(RollingHash(GraftSqlBridge.expression(c)))
 }
@@ -68,28 +58,27 @@ object RollingHash {
  * beat a deque; byte-based, identical to char-based on ASCII corpora.
  * Shorter-than-k+w-1 inputs yield an empty array (no fingerprints).
  */
-case class WinnowingMins(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+case class WinnowingMins(child: Expression, k: Int, w: Int) extends UnaryKernel {
   require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got k=$k w=$w")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnowing_mins"
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
+  override protected def constants: Seq[Any] = Seq(k, w)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnowing_mins requires a string column, got ${child.dataType}")
+  override protected def nullSafeEval(input: Any): Any =
+    WinnowingMins.compute(input.asInstanceOf[UTF8String], k, w)
 
-  // r22: all three array-returning kernels in this file now emit
-  // UnsafeArrayData.fromPrimitiveArray — GenericArrayData's primitive-array
-  // ctors call .toSeq and box every element (VERDICT r21 #2's allocation-
-  // pressure class). Same values, unboxed container.
-  override protected def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
+  override protected def withNewChildInternal(newChild: Expression): WinnowingMins =
+    copy(child = newChild)
+}
+
+object WinnowingMins {
+  /** Unsafe primitive container: GenericArrayData's primitive-array
+    * constructors box every element. */
+  def compute(text: UTF8String, k: Int, w: Int): ArrayData = {
+    val b = text.getBytes
     val n = b.length
-    if (n < k + w - 1)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.empty[Long])
+    if (n < k + w - 1) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
     val nh = n - k + 1
     val hs = new Array[Long](nh)
     var i = 0
@@ -109,48 +98,9 @@ case class WinnowingMins(child: Expression, k: Int, w: Int)
       mins(p) = m
       p += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ev.value
-      s"""
-         |byte[] ${v}_b = $c.getBytes();
-         |int ${v}_n = ${v}_b.length;
-         |long[] ${v}_mins;
-         |if (${v}_n < ${k + w - 1}) {
-         |  ${v}_mins = new long[0];
-         |} else {
-         |  int ${v}_nh = ${v}_n - $k + 1;
-         |  long[] ${v}_hs = new long[${v}_nh];
-         |  for (int ${v}_i = 0; ${v}_i < ${v}_nh; ${v}_i++) {
-         |    long ${v}_h = 0L;
-         |    for (int ${v}_j = 0; ${v}_j < $k; ${v}_j++) {
-         |      ${v}_h = (${v}_h * 257L + (${v}_b[${v}_i + ${v}_j] & 0xff)) % 1000000007L;
-         |    }
-         |    ${v}_hs[${v}_i] = ${v}_h;
-         |  }
-         |  ${v}_mins = new long[${v}_nh - $w + 1];
-         |  for (int ${v}_p = 0; ${v}_p < ${v}_mins.length; ${v}_p++) {
-         |    long ${v}_m = ${v}_hs[${v}_p];
-         |    for (int ${v}_q = 1; ${v}_q < $w; ${v}_q++) {
-         |      if (${v}_hs[${v}_p + ${v}_q] < ${v}_m) ${v}_m = ${v}_hs[${v}_p + ${v}_q];
-         |    }
-         |    ${v}_mins[${v}_p] = ${v}_m;
-         |  }
-         |}
-         |$v = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(${v}_mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowingMins =
-    copy(child = newChild)
-}
-
-object WinnowingMins {
   def ofColumn(c: Column, k: Int, w: Int): Column =
     GraftSqlBridge.column(WinnowingMins(GraftSqlBridge.expression(c), k, w))
 }
@@ -165,40 +115,23 @@ object WinnowingMins {
  * groupBy(doc) reassembly, which shuffled every TOKEN to rebuild what was
  * one row per doc — this is partition-local with no exchange at all.
  */
-case class FeatureHashCounts(child: Expression, dim: Int)
-    extends UnaryExpression {
+case class FeatureHashCounts(child: Expression, dim: Int) extends UnaryKernel {
   require(dim > 0 && (dim & (dim - 1)) == 0, "dim must be a power of two")
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "feature_hash_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"feature_hash_counts requires a string column, got ${child.dataType}")
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
+  override protected def constants: Seq[Any] = Seq(dim)
 
   override protected def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      FeatureHashCounts.compute(input.asInstanceOf[UTF8String].getBytes, dim))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ev.value
-      s"""
-         |byte[] ${v}_b = $c.getBytes();
-         |double[] ${v}_cnt = graft.text.FeatureHashCounts.compute(${v}_b, $dim);
-         |$v = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(${v}_cnt);
-       """.stripMargin
-    })
+    FeatureHashCounts.compute(input.asInstanceOf[UTF8String], dim)
 
   override protected def withNewChildInternal(newChild: Expression): FeatureHashCounts =
     copy(child = newChild)
 }
 
 /**
- * [[FeatureHashCounts]] fused with the L2 normalization (r21): counts, the
- * norm fold and the divide all in ONE compiled kernel, returning NULL for a
+ * [[FeatureHashCounts]] fused with the L2 normalization: counts, the norm
+ * fold and the divide all in ONE compiled kernel, returning NULL for a
  * token-less document (zero vector). Why fusion matters: the unfused chain
  * (`counts` → `sqrt(aggregate(...))` norm → `transform(...)` divide →
  * `filter(norm > 0)`) let Catalyst push the filter below the projection and
@@ -209,53 +142,28 @@ case class FeatureHashCounts(child: Expression, dim: Int)
  * to the old chain: norm = sqrt of the left fold 0.0 + x·x in bucket
  * order, then per-bucket x / norm.
  */
-case class FeatureHashEmbedding(child: Expression, dim: Int)
-    extends UnaryExpression {
+case class FeatureHashEmbedding(child: Expression, dim: Int) extends UnaryKernel {
   require(dim > 0 && (dim & (dim - 1)) == 0, "dim must be a power of two")
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.DoubleType, containsNull = false)
-  override def nullable: Boolean = true
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "feature_hash_embedding"
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
+  override protected def constants: Seq[Any] = Seq(dim)
+  override protected def mayReturnNull: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"feature_hash_embedding requires a string column, got ${child.dataType}")
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = FeatureHashEmbedding.compute(
-      input.asInstanceOf[UTF8String].getBytes, dim)
-    if (v == null) null
-    else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ev.value
-      s"""
-         |byte[] ${v}_b = $c.getBytes();
-         |double[] ${v}_e = graft.text.FeatureHashEmbedding.compute(${v}_b, $dim);
-         |if (${v}_e == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  $v = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray(${v}_e);
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(input: Any): Any =
+    FeatureHashEmbedding.compute(input.asInstanceOf[UTF8String], dim)
 
   override protected def withNewChildInternal(newChild: Expression): FeatureHashEmbedding =
     copy(child = newChild)
 }
 
 object FeatureHashEmbedding {
-  /** Static kernel shared by eval and codegen: [[FeatureHashCounts.compute]]
-    * then the EXACT normalization fold the unfused column chain performed —
-    * acc = 0.0; acc += x·x in bucket order; norm = sqrt(acc); x / norm —
-    * so fused and unfused vectors are bit-identical. Null = zero vector. */
-  def compute(b: Array[Byte], dim: Int): Array[Double] = {
-    val cnt = FeatureHashCounts.compute(b, dim)
+  /** [[FeatureHashCounts.counts]] then the EXACT normalization fold the
+    * unfused column chain performed — acc = 0.0; acc += x·x in bucket
+    * order; norm = sqrt(acc); x / norm — so fused and unfused vectors are
+    * bit-identical. Null = zero vector. */
+  def compute(text: UTF8String, dim: Int): ArrayData = {
+    val cnt = FeatureHashCounts.counts(text.getBytes, dim)
     var acc = 0.0
     var i = 0
     while (i < dim) { acc += cnt(i) * cnt(i); i += 1 }
@@ -263,7 +171,7 @@ object FeatureHashEmbedding {
     if (!(norm > 0.0)) return null
     i = 0
     while (i < dim) { cnt(i) = cnt(i) / norm; i += 1 }
-    cnt
+    UnsafeArrayData.fromPrimitiveArray(cnt)
   }
 
   def ofColumn(c: Column, dim: Int): Column =
@@ -271,8 +179,11 @@ object FeatureHashEmbedding {
 }
 
 object FeatureHashCounts {
-  /** Static kernel shared by eval and codegen (called from generated Java). */
-  def compute(b: Array[Byte], dim: Int): Array[Double] = {
+  def compute(text: UTF8String, dim: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(counts(text.getBytes, dim))
+
+  /** Bucket counts of the space-separated tokens of `b`. */
+  def counts(b: Array[Byte], dim: Int): Array[Double] = {
     val mask = dim - 1
     val cnt = new Array[Double](dim)
     var h = 0L

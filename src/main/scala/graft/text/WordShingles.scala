@@ -2,12 +2,12 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{BinaryKernel, KernelInput, UnaryKernel}
 
 /**
  * Distinct word k-shingles of a text as a native expression — the dedup
@@ -18,23 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
  * with a single output array. First-occurrence order (like array_distinct).
  * Texts with fewer than k tokens yield an empty array.
  */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int) extends UnaryKernel {
   require(k >= 1, "shingle size must be >= 1")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires a string column, got ${child.dataType}")
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
+  override protected def constants: Seq[Any] = Seq(k)
 
   override protected def nullSafeEval(input: Any): Any =
     WordShingles.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.WordShingles.compute($c, $k);")
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)
@@ -70,7 +63,7 @@ object WordShingles {
 }
 
 /**
- * Contiguous word n-grams of a token array as ONE compiled pass (r22):
+ * Contiguous word n-grams of a token array as ONE compiled pass:
  * element i = tokens[i..i+n-1] joined by a single space, duplicates KEPT,
  * order preserved — the n-gram stream the frequency operators (top-k
  * bigrams/n-grams, DSIR features) explode. Replaces the
@@ -82,24 +75,16 @@ object WordShingles {
  * empty array (the `when(size >= n, ...)` guard the old chain needed,
  * folded in).
  */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, "n must be positive")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_ngrams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams requires an array<string> column, got $t")
-  }
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Strings)
+  override protected def constants: Seq[Any] = Seq(n)
 
   override protected def nullSafeEval(input: Any): Any =
     WordNgrams.compute(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.WordNgrams.compute($c, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): WordNgrams =
     copy(child = newChild)
@@ -131,7 +116,7 @@ object WordNgrams {
 }
 
 /**
- * Consecutive fixed-width token chunks as ONE compiled pass (r22): chunk i
+ * Consecutive fixed-width token chunks as ONE compiled pass: chunk i
  * = tokens[i·w .. min((i+1)·w, m)-1] joined by a single space (the final
  * chunk may be short) — the C4-style chunk splitter [[graft.text.Dedup
  * .dedupChunks]] explodes. Replaces the `transform(sequence(0,
@@ -142,24 +127,16 @@ object WordNgrams {
  * never empty (split always yields ≥ 1 element), so the m = 0 case is
  * unreachable; it yields an empty array.
  */
-case class TokenChunks(child: Expression, chunkTokens: Int) extends UnaryExpression {
+case class TokenChunks(child: Expression, chunkTokens: Int) extends UnaryKernel {
   require(chunkTokens >= 1, "chunkTokens must be positive")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_chunks"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_chunks requires an array<string> column, got $t")
-  }
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Strings)
+  override protected def constants: Seq[Any] = Seq(chunkTokens)
 
   override protected def nullSafeEval(input: Any): Any =
     TokenChunks.compute(input.asInstanceOf[ArrayData], chunkTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.TokenChunks.compute($c, $chunkTokens);")
 
   override protected def withNewChildInternal(newChild: Expression): TokenChunks =
     copy(child = newChild)
@@ -200,24 +177,16 @@ object TokenChunks {
  * shingles unless two distinct shingles of one document collide in 64 bits
  * (P ~ n^2 / 2^65 — negligible at any real document size).
  */
-case class HashedWordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class HashedWordShingles(child: Expression, k: Int) extends UnaryKernel {
   require(k >= 1, "shingle size must be >= 1")
 
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType,
-    containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hashed_word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hashed_word_shingles requires a string column, got ${child.dataType}")
+  override protected def inputKinds: Seq[KernelInput] = Seq(KernelInput.Text)
+  override protected def constants: Seq[Any] = Seq(k)
 
   override protected def nullSafeEval(input: Any): Any =
     HashedWordShingles.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.text.HashedWordShingles.compute($c, $k);")
 
   override protected def withNewChildInternal(newChild: Expression): HashedWordShingles =
     copy(child = newChild)
@@ -235,8 +204,7 @@ object HashedWordShingles {
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
-      hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUTF8String(sh.getUTF8String(i), Seed)
+      hs(i) = XXH64.hashUTF8String(sh.getUTF8String(i), Seed)
       i += 1
     }
     java.util.Arrays.sort(hs)
@@ -248,9 +216,8 @@ object HashedWordShingles {
       if (m == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
       i += 1
     }
-    // r22: unboxed container — GenericArrayData(long[]) boxes per element
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-      if (m == n) hs else java.util.Arrays.copyOf(hs, m))
+    // unboxed container — GenericArrayData(long[]) boxes per element
+    UnsafeArrayData.fromPrimitiveArray(if (m == n) hs else java.util.Arrays.copyOf(hs, m))
   }
 
   def ofColumn(c: Column, k: Int): Column =
@@ -263,36 +230,15 @@ object HashedWordShingles {
  * invocation). Null when both sides are empty (try_divide semantics, same
  * as [[graft.text.Dedup.jaccard]]).
  */
-case class JaccardSortedLongs(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullable: Boolean = true
+case class JaccardSortedLongs(left: Expression, right: Expression) extends BinaryKernel {
+  override def dataType: DataType = DoubleType
   override def prettyName: String = "jaccard_sorted_longs"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sorted_longs requires two array<bigint> columns, got " +
-        s"${left.dataType} / ${right.dataType}")
-  }
+  override protected def inputKinds: Seq[KernelInput] =
+    Seq(KernelInput.Longs, KernelInput.Longs)
+  override protected def mayReturnNull: Boolean = true
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     JaccardSortedLongs.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("jac")
-      s"""
-      Object $r = graft.text.JaccardSortedLongs.compute($a, $b);
-      if ($r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Double) $r).doubleValue(); }
-      """
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSortedLongs =
@@ -301,7 +247,7 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
 
 object JaccardSortedLongs {
   /** Merge-count intersection of two sorted distinct long arrays. */
-  def compute(a: ArrayData, b: ArrayData): Any = {
+  def compute(a: ArrayData, b: ArrayData): java.lang.Double = {
     val na = a.numElements()
     val nb = b.numElements()
     if (na == 0 && nb == 0) return null
@@ -321,7 +267,7 @@ object JaccardSortedLongs {
 }
 
 /**
- * Tokens NOT covered by any k-span starting at one of `starts` (r18) — the
+ * Tokens NOT covered by any k-span starting at one of `starts` — the
  * rebuild step of [[graft.text.Dedup.removeDuplicatedSpans]]. `starts` must
  * be SORTED ascending (the caller sorts once in the aggregate); the merge is
  * then a single pointer pass, O(tokens + starts) per document, instead of
@@ -330,28 +276,18 @@ object JaccardSortedLongs {
  * s has s <= p < s + k. Order of surviving tokens is preserved.
  */
 case class UncoveredTokens(left: Expression, right: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel {
   require(k > 0, "k must be positive")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "uncovered_tokens"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), ArrayType(org.apache.spark.sql.types.IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"uncovered_tokens requires (array<string>, array<int>), got $l / $r")
-  }
+  override protected def inputKinds: Seq[KernelInput] =
+    Seq(KernelInput.Strings, KernelInput.Ints)
+  override protected def constants: Seq[Any] = Seq(k)
 
   override protected def nullSafeEval(toks: Any, starts: Any): Any =
     UncoveredTokens.compute(toks.asInstanceOf[ArrayData],
       starts.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)" +
-        s" graft.text.UncoveredTokens.compute($t, $s, $k);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): UncoveredTokens =

@@ -159,4 +159,25 @@ class JavaApiSpec extends AnyFunSuite with Matchers with SparkTestSession {
     fit.count() shouldBe 1L
     fit.columns should contain("smoothing")
   }
+
+  test("Java resample picks the same aggregate as the Scala by-name overload") {
+    val s = spark
+    import s.implicits._
+    // 2-tick buckets: a@0 opens with a null, b@2 holds only a null
+    val obs = Seq[(String, Long, _root_.java.lang.Double)](("a", 0L, null), ("a", 1L, 1.0),
+      ("a", 2L, 2.0), ("b", 0L, 10.0), ("b", 2L, null))
+      .toDF("key", "ts_nanos", "value")
+    def values(df: org.apache.spark.sql.DataFrame): Seq[Any] =
+      df.orderBy("key", "ts_nanos").collect().toSeq.map(_.get(2))
+    for ((agg, expected) <- Seq("count" -> Seq(1.0, 1.0, 1.0, 0.0),
+        "first" -> Seq(1.0, 2.0, 10.0, null))) {
+      val viaJava = graft.api.java.JavaTimeSeriesOps.resample(obs, 2L, agg,
+        false, false, 0L, "key", "ts_nanos", "value")
+      val viaScala = graft.ts.TimeSeriesOps.resample(obs, 2L, agg,
+        false, false, 0L, "key", "ts_nanos", "value")
+      viaJava.schema shouldBe viaScala.schema
+      values(viaJava) shouldBe values(viaScala)
+      values(viaJava) shouldBe expected
+    }
+  }
 }

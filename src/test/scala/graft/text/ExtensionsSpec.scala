@@ -604,6 +604,20 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SparkTestSession {
     sqlMins.getAs[scala.collection.Seq[Long]]("e") shouldBe empty
   }
 
+  test("SQL kernel functions reject a non-literal integer argument by name") {
+    val s = spark
+    import s.implicits._
+    Seq(("a b c d", 2)).toDF("t", "n").createOrReplaceTempView("nonlit")
+    for (call <- Seq("hashed_word_shingles(t, n)", "winnowing_mins(t, n, 2)",
+        "uncovered_tokens(split(t, ' '), array(0), n)")) {
+      val fn = call.takeWhile(_ != '(')
+      val e = intercept[IllegalArgumentException] {
+        spark.sql(s"SELECT $call FROM nonlit").collect()
+      }
+      e.getMessage should include(fn)
+    }
+  }
+
   test("pca projection recovers a hand-built dominant axis, centered") {
     val s = spark
     import s.implicits._
