@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{DateTimeIndex, Frequency}
+import graft.models.PerSeries
 import graft.ts.{RollAlign, TimeSeriesOps => TS}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -482,26 +483,18 @@ object SparkEntry {
     "m12_arimax" -> ((s, dir) => {
       // per-user daily mean value with the daily event count as an
       // exogenous regressor: ARIMAX(1,0,0; xLag=1)
-      val s2 = s
-      import s2.implicits._
       val daily = Tables.events(s, dir)
         .groupBy(col("user_id"), unix_micros(date_trunc("DAY",
           timestamp_micros(col("ts_us")))).as("day_us"))
         .agg(avg("value").as("value"), count(lit(1)).cast("double").as("n_events"))
-      daily.select(col("user_id").cast("string").as("key"), col("day_us"),
-          col("value"), col("n_events"))
-        .as[(String, Long, Double, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (k, it) =>
-          val pts = it.toArray.sortBy(_._2)
-          try {
-            val y = pts.map(_._3)
-            val x = pts.map(p => Array(p._4))
-            val m = graft.models.ARIMAX.fitModel(1, 0, 0, y, x, xLag = 1)
-            Iterator.single((k, m.intercept, m.arCoefs.headOption.getOrElse(0.0),
-              m.xCoefs(0)(0), m.xCoefs(0)(1)))
-          } catch { case _: Throwable => Iterator.empty }
-        }.toDF("key", "intercept", "ar1", "beta_x0", "beta_x1")
+      PerSeries.rows(daily, "user_id", "day_us", Seq("value", "n_events")) { (k, _, yx) =>
+        PerSeries.skipOnFailure {
+          val m = graft.models.ARIMAX.fitModel(1, 0, 0, yx.map(_(0)),
+            yx.map(r => Array(r(1))), xLag = 1)
+          Some((k, m.intercept, m.arCoefs.headOption.getOrElse(0.0),
+            m.xCoefs(0)(0), m.xCoefs(0)(1)))
+        }
+      }.toDF("key", "intercept", "ar1", "beta_x0", "beta_x1")
     }),
     "sp01_spline_series" -> ((s, dir) => {
       // series-layout pipeline: daily obs -> conform to index (NaN gaps) ->
@@ -520,30 +513,22 @@ object SparkEntry {
     }),
     "m11_cochrane_orcutt" -> ((s, dir) => {
       // regression of each user's daily mean on the day rank, AR(1) errors
-      val s2 = s
-      import s2.implicits._
       val daily = Tables.events(s, dir)
         .groupBy(col("user_id"), unix_micros(date_trunc("DAY",
           timestamp_micros(col("ts_us")))).as("day_us"))
         .agg(avg("value").as("value"))
-      daily.select(col("user_id").cast("string").as("key"),
-          col("day_us").as("ts"), col("value"))
-        .as[graft.models.KeyedPoint]
-        .groupByKey(_.key)
-        .flatMapGroups { (k, it) =>
-          val pts = it.toArray.sortBy(_.ts)
-          try {
-            val y = pts.map(_.value)
-            val x = Array.tabulate(y.length)(i => Array(i.toDouble))
-            // tol = 0.0 pins the iteration count: both engine and oracle run
-            // the full 20 Cochrane-Orcutt rounds (any early stop is an exact
-            // fixed point, where extra rounds are no-ops), so the TRUE
-            // DuckDB oracle (r16) can unroll the same 20 rounds without
-            // replicating a floating-point stopping rule
-            val m = graft.models.RegressionARIMA.fitCochraneOrcutt(y, x, tol = 0.0)
-            Iterator.single((k, m.beta(0), m.beta(1), m.rho))
-          } catch { case _: Throwable => Iterator.empty }
-        }.toDF("key", "intercept", "slope", "rho")
+      PerSeries(daily, "user_id", "day_us", "value") { (k, _, y) =>
+        PerSeries.skipOnFailure {
+          val x = Array.tabulate(y.length)(i => Array(i.toDouble))
+          // tol = 0.0 pins the iteration count: both engine and oracle run
+          // the full 20 Cochrane-Orcutt rounds (any early stop is an exact
+          // fixed point, where extra rounds are no-ops), so the TRUE
+          // DuckDB oracle (r16) can unroll the same 20 rounds without
+          // replicating a floating-point stopping rule
+          val m = graft.models.RegressionARIMA.fitCochraneOrcutt(y, x, tol = 0.0)
+          Some((k, m.beta(0), m.beta(1), m.rho))
+        }
+      }.toDF("key", "intercept", "slope", "rho")
         .select(col("key"), (round(col("intercept"), 6) + lit(0.0)).as("intercept"),
           (round(col("slope"), 6) + lit(0.0)).as("slope"),
           (round(col("rho"), 6) + lit(0.0)).as("rho"))

@@ -10,6 +10,8 @@ import org.apache.commons.math3.stat.regression.OLSMultipleLinearRegression
 
 import breeze.linalg.{DenseMatrix => BDM, eig}
 
+import scala.util.control.NonFatal
+
 /**
  * ARIMA(p,d,q): after order-d differencing,
  *   z_t = c + Σ φ_i z_{t-i} + Σ θ_j e_{t-j} + e_t.
@@ -245,7 +247,7 @@ object ARIMA {
       ols.newSampleData(y, x)
       ols.estimateRegressionParameters()
     } catch {
-      case _: Throwable =>
+      case NonFatal(_) =>
         val out = new Array[Double](nParams)
         if (includeIntercept) out(0) = ArrayOps.mean(z)
         out
@@ -309,7 +311,7 @@ object ARIMA {
             override def value(params: Array[Double]): Double = negLL(params)
           }), new ObjectiveFunctionGradient(grad), GoalType.MINIMIZE,
             new InitialGuess(init), new MaxEval(20000), new MaxIter(20000)).getPoint
-        } catch { case _: Throwable => init }
+        } catch { case NonFatal(_) => init }
       } else {
         val lower = new Array[Double](nParams)
         val upper = new Array[Double](nParams)
@@ -336,7 +338,7 @@ object ARIMA {
             }), GoalType.MINIMIZE, new InitialGuess(start),
               new SimpleBounds(lower, upper), new MaxEval(30000), new MaxIter(30000))
               .getPoint
-          } catch { case _: Throwable => init }
+          } catch { case NonFatal(_) => init }
         } else { // css-nm: Nelder-Mead with out-of-bounds penalty
           import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.{NelderMeadSimplex, SimplexOptimizer}
           def penalized(params: Array[Double]): Double = {
@@ -356,7 +358,7 @@ object ARIMA {
             }), GoalType.MINIMIZE, new InitialGuess(start),
               new NelderMeadSimplex(nParams, 0.1), new MaxEval(20000),
               new MaxIter(20000)).getPoint
-          } catch { case _: Throwable => init }
+          } catch { case NonFatal(_) => init }
         }
       }
     ARIMAModel(p, d, q, fitted, includeIntercept)
@@ -380,7 +382,7 @@ object ARIMA {
       try {
         val m = fitModel(p, d, q, ts, includeIntercept = ic)
         if (m.isStationary && m.isInvertible) Some((m, m.approxAIC(ts))) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
     val seeds = Seq((2, 2), (0, 0), (1, 0), (0, 1))
     var best: Option[(ARIMAModel, Double)] = None

@@ -5,6 +5,8 @@ import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
 import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
 import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
 
+import scala.util.control.NonFatal
+
 /**
  * ARIMAX(p,d,q; xLag): ARIMA with lagged exogenous regressors,
  *   z_t = c + Σ φ_i z_{t-i} + Σ θ_j e_{t-j} + Σ_k Σ_{l=0..xLag} β_{k,l} x_{k,t-l} + e_t
@@ -141,7 +143,7 @@ object ARIMAX {
     val fitted = try {
       opt.optimize(objective, GoalType.MINIMIZE, new InitialGuess(init),
         new SimpleBounds(lower, upper), new MaxEval(30000), new MaxIter(30000)).getPoint
-    } catch { case _: Throwable => init }
+    } catch { case NonFatal(_) => init }
     ARIMAXModel(p, d, q, xLag, nXCols, fitted, includeIntercept)
   }
 }

@@ -6,6 +6,8 @@ import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunct
 import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter}
 import org.apache.commons.math3.random.RandomGenerator
 
+import scala.util.control.NonFatal
+
 /**
  * EGARCH(1,1) — Nelson (1991) exponential GARCH:
  *
@@ -126,7 +128,7 @@ object EGARCH {
       }), GoalType.MINIMIZE, new InitialGuess(init),
         new NelderMeadSimplex(4, 0.05), new MaxEval(4000), new MaxIter(4000))
         .getPoint
-    } catch { case _: Throwable => init }
+    } catch { case NonFatal(_) => init }
     unpack(p)
   }
 }

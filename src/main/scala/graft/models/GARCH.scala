@@ -6,6 +6,8 @@ import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunct
 import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
 import org.apache.commons.math3.random.RandomGenerator
 
+import scala.util.control.NonFatal
+
 /**
  * GARCH(1,1): ε_t = √h_t · z_t,  h_t = ω + α ε²_{t-1} + β h_{t-1}
  * (capability of reference models/GARCH.scala:26-260, re-implemented:
@@ -161,7 +163,7 @@ object GARCH {
       }), GoalType.MINIMIZE, new InitialGuess(Array(v * 0.2, 0.2, 0.5)),
         new NelderMeadSimplex(3, 0.05), new MaxEval(10000), new MaxIter(10000))
         .getPoint
-    } catch { case _: Throwable => Array(v * 0.2, 0.2, 0.5) }
+    } catch { case NonFatal(_) => Array(v * 0.2, 0.2, 0.5) }
     GARCHModel(p(0), p(1), p(2))
   }
 }

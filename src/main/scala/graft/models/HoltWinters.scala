@@ -5,6 +5,8 @@ import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
 import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
 import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
 
+import scala.util.control.NonFatal
+
 /**
  * Triple exponential smoothing (Holt-Winters), additive and multiplicative,
  * compatible with R stats::HoltWinters (capability of reference
@@ -290,7 +292,7 @@ object HoltWinters {
       opt.optimize(objective, GoalType.MINIMIZE,
         new InitialGuess(Array(best._1, best._2, best._3)),
         new NelderMeadSimplex(3, 0.05), new MaxEval(5000), new MaxIter(5000)).getPoint
-    } catch { case _: Throwable => Array(best._1, best._2, best._3) }
+    } catch { case NonFatal(_) => Array(best._1, best._2, best._3) }
     val clamp = (v: Double) => math.min(math.max(v, 1e-8), 1.0)
     HoltWintersModel(period, clamp(pm(0)), clamp(pm(1)), clamp(pm(2)), additive)
   }

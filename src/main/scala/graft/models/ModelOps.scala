@@ -1,7 +1,8 @@
 package graft.models
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+
+import PerSeries.{medianStep, skipOnFailure}
 
 /** Row shapes for the per-key model lifts (stable Encoders). */
 case class KeyedPoint(key: String, ts: Long, value: Double)
@@ -28,198 +29,127 @@ case class MannKendallResult(key: String, s: Long, nPairs: Long, tau: Double,
 
 /**
  * DataFrame lift of the model kernels: every fit is embarrassingly parallel
- * per key, so it runs as one `groupByKey(key).mapGroups` — a single shuffle
+ * per key, so each function is one [[PerSeries]] lift — a single shuffle
  * on the series key, whole fits executor-local, no driver involvement
  * (SURVEY §2.8's "per-series iterative estimation" pattern; at 100 TB each
  * task carries one series, matching the reference's design assumption that a
- * single series fits in memory).
+ * single series fits in memory). The optimizer fits, forecasts, LM tests,
+ * the AR filter and ARX drop a key whose kernel fails
+ * ([[PerSeries.skipOnFailure]]); every other lift fails loudly.
  */
 object ModelOps {
 
-  /** Gather (key, ts, value) rows into per-key time-ordered value arrays. */
-  private def grouped(df: DataFrame, key: String, ts: String, value: String)
-      : Dataset[(String, Array[Double])] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // null observations (e.g. a try_divide-null return rate on a zero base)
-    // are dropped: a missing point cannot participate in a per-series fit,
-    // and the non-nullable KeyedPoint encoder would throw on it
-    df.filter(col(value).isNotNull)
-      .select(col(key).cast("string").as("key"), col(ts).cast("long").as("ts"),
-        col(value).cast("double").as("value"))
-      .as[KeyedPoint]
-      .groupByKey(_.key)
-      .mapGroups { (k, it) =>
-        val arr = it.toArray.sortBy(_.ts).map(_.value)
-        (k, arr)
-      }
-  }
-
-  /** Per-key (ts, value) pairs preserving timestamps (for forecasts). */
-  private def groupedWithTs(df: DataFrame, key: String, ts: String, value: String)
-      : Dataset[(String, Array[Long], Array[Double])] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.filter(col(value).isNotNull)
-      .select(col(key).cast("string").as("key"), col(ts).cast("long").as("ts"),
-        col(value).cast("double").as("value"))
-      .as[KeyedPoint]
-      .groupByKey(_.key)
-      .mapGroups { (k, it) =>
-        val pts = it.toArray.sortBy(_.ts)
-        (k, pts.map(_.ts), pts.map(_.value))
-      }
-  }
-
   def fitArima(df: DataFrame, p: Int, d: Int, q: Int, key: String = "key",
       ts: String = "ts_nanos", value: String = "value",
-      includeIntercept: Boolean = true): Dataset[ArimaFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      includeIntercept: Boolean = true): Dataset[ArimaFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure { // a degenerate series must not kill the job
         val m = ARIMA.fitModel(p, d, q, arr, includeIntercept)
         Some(ArimaFit(k, p, d, q, m.coefficients.toSeq, m.logLikelihood(arr),
           m.approxAIC(arr), m.isStationary, m.isInvertible))
-      } catch { case _: Throwable => None } // a degenerate series must not kill the job
+      }
     }
-  }
 
   def autoFitArima(df: DataFrame, key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[ArimaFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      value: String = "value"): Dataset[ArimaFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val m = ARIMA.autoFit(arr)
         Some(ArimaFit(k, m.p, m.d, m.q, m.coefficients.toSeq, m.logLikelihood(arr),
           m.approxAIC(arr), m.isStationary, m.isInvertible))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   /** Fit + h-step forecast per key; future ts extrapolated from the median step. */
   def forecastArima(df: DataFrame, p: Int, d: Int, q: Int, h: Int,
       key: String = "key", ts: String = "ts_nanos", value: String = "value")
-      : Dataset[ForecastPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, arr) =>
-      try {
-      val m = ARIMA.fitModel(p, d, q, arr)
-      val fc = m.forecast(arr, h).takeRight(h)
-      val step = medianStep(tss)
-      val lastTs = tss.last
-      fc.zipWithIndex.map { case (v, i) =>
-        ForecastPoint(k, i + 1, lastTs + step * (i + 1), v)
+      : Dataset[ForecastPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, arr) =>
+      skipOnFailure {
+        val m = ARIMA.fitModel(p, d, q, arr)
+        val fc = m.forecast(arr, h).takeRight(h)
+        val step = medianStep(tss)
+        fc.zipWithIndex.map { case (v, i) =>
+          ForecastPoint(k, i + 1, tss.last + step * (i + 1), v)
+        }
       }
-      } catch { case _: Throwable => Nil }
     }
-  }
 
   def fitEwma(df: DataFrame, key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[EwmaFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try { val m = EWMA.fitModel(arr); Some(EwmaFit(k, m.smoothing, m.sse(arr))) }
-      catch { case _: Throwable => None }
+      value: String = "value"): Dataset[EwmaFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure { val m = EWMA.fitModel(arr); Some(EwmaFit(k, m.smoothing, m.sse(arr))) }
     }
-  }
 
   def fitGarch(df: DataFrame, key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[GarchFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      value: String = "value"): Dataset[GarchFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val m = GARCH.fitModel(arr)
         Some(GarchFit(k, m.omega, m.alpha, m.beta, m.logLikelihood(arr)))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   /** EGARCH(1,1) per key (leverage-asymmetric volatility). */
   def fitEgarch(df: DataFrame, key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[EgarchFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      value: String = "value"): Dataset[EgarchFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val m = EGARCH.fitModel(arr)
         Some(EgarchFit(k, m.omega, m.alpha, m.gamma, m.beta, m.logLikelihood(arr)))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   def fitAr(df: DataFrame, p: Int, key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[ArFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      value: String = "value"): Dataset[ArFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val m = Autoregression.fitModel(arr, p)
         Some(ArFit(k, m.c, m.coefficients.toSeq))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   def fitHoltWinters(df: DataFrame, period: Int, modelType: String = "additive",
       key: String = "key", ts: String = "ts_nanos", value: String = "value")
-      : Dataset[HoltWintersFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      : Dataset[HoltWintersFit] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure { // e.g. fewer than 2 full periods
         val m = HoltWinters.fitModel(arr, period, modelType)
         Some(HoltWintersFit(k, period, m.alpha, m.beta, m.gamma, m.sse(arr)))
-      } catch { case _: Throwable => None } // e.g. fewer than 2 full periods
+      }
     }
-  }
 
   def kpssAll(df: DataFrame, regression: String = "c", key: String = "key",
       ts: String = "ts_nanos", value: String = "value",
-      lags: Int = -1): Dataset[TestResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).map { case (k, arr) =>
+      lags: Int = -1): Dataset[TestResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
       val (s, p) = graft.stats.StatTests.kpss(arr, regression, lags)
-      TestResult(k, s, p)
+      Some(TestResult(k, s, p))
     }
-  }
 
   def adfAll(df: DataFrame, regression: String = "c", key: String = "key",
       ts: String = "ts_nanos", value: String = "value",
-      maxLag: Int = -1): Dataset[TestResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).map { case (k, arr) =>
+      maxLag: Int = -1): Dataset[TestResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
       val (s, p) = graft.stats.StatTests.adf(arr, maxLag, regression)
-      TestResult(k, s, p)
+      Some(TestResult(k, s, p))
     }
-  }
 
   def ljungBoxAll(df: DataFrame, lags: Int = 10, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).map { case (k, arr) =>
+      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
       val (s, p) = graft.stats.StatTests.ljungBox(arr, lags)
-      TestResult(k, s, p)
+      Some(TestResult(k, s, p))
     }
-  }
 
   /** Fixed-alpha exponential smoothing of every series (the reference's
     * EWMA addTimeDependentEffects lifted per key — models/EWMA.scala). */
   def ewmaSmoothed(df: DataFrame, alpha: Double, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[SmoothedPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, vals) =>
+      ts: String = "ts_nanos", value: String = "value"): Dataset[SmoothedPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, vals) =>
       val sm = EWMAModel(alpha).addTimeDependentEffects(vals)
       tss.indices.map(i => SmoothedPoint(k, tss(i), sm(i)))
     }
-  }
 
   /**
    * Fixed-parameter Holt linear (double exponential) smoothing of every
@@ -232,10 +162,8 @@ object ModelOps {
    */
   def holtSmoothed(df: DataFrame, alpha: Double, beta: Double,
       key: String = "key", ts: String = "ts_nanos",
-      value: String = "value"): Dataset[HoltPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, vals) =>
+      value: String = "value"): Dataset[HoltPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, vals) =>
       val out = new Array[HoltPoint](vals.length)
       var l = vals(0)
       var b = 0.0
@@ -248,96 +176,77 @@ object ModelOps {
         out(i) = HoltPoint(k, tss(i), l, b)
         i += 1
       }
-      out.toSeq
+      out.iterator
     }
-  }
 
   /** h-step EWMA forecast: fit the smoothing parameter, then the flat
     * SES forecast (every horizon = last smoothed level). */
   def forecastEwma(df: DataFrame, h: Int, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[ForecastPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, vals) =>
-      try {
+      ts: String = "ts_nanos", value: String = "value"): Dataset[ForecastPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, vals) =>
+      skipOnFailure {
         val m = EWMA.fitModel(vals)
         val fc = m.forecast(vals, h)
         val step = medianStep(tss)
         (1 to h).map(i => ForecastPoint(k, i, tss.last + step * i, fc(i - 1)))
-      } catch { case _: Throwable => Nil }
+      }
     }
-  }
 
   /** h-step Holt-Winters forecast per key (reference HoltWinters forecast
     * surface — models/HoltWinters.scala). */
   def forecastHoltWinters(df: DataFrame, period: Int, h: Int,
       modelType: String = "additive", key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[ForecastPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, vals) =>
-      try {
+      ts: String = "ts_nanos", value: String = "value"): Dataset[ForecastPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, vals) =>
+      skipOnFailure {
         val m = HoltWinters.fitModel(vals, period, modelType)
         val step = medianStep(tss)
         m.forecast(vals, h).zipWithIndex.map { case (v, i) =>
           ForecastPoint(k, i + 1, tss.last + step * (i + 1), v)
         }
-      } catch { case _: Throwable => Nil }
+      }
     }
-  }
 
   /** Mann-Kendall trend test of every series (monotone-trend detection
     * without a linearity assumption — the robust sibling of linearTrend). */
   def mannKendallAll(df: DataFrame, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[MannKendallResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).map { case (k, tss, arr) =>
+      ts: String = "ts_nanos", value: String = "value"): Dataset[MannKendallResult] =
+    PerSeries(df, key, ts, value) { (k, tss, arr) =>
       // timestamps ride along so equal-ts pairs are excluded — keeps the
       // kernel deterministic (and oracle-consistent) under duplicate ts
       val (s, nPairs, tau, varS, z) = graft.stats.StatTests.mannKendall(arr, tss)
-      MannKendallResult(k, s, nPairs, tau, varS, z)
+      Some(MannKendallResult(k, s, nPairs, tau, varS, z))
     }
-  }
 
   /** Durbin-Watson statistic of every series (values treated as residuals). */
   def durbinWatsonAll(df: DataFrame, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[DwResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).map { case (k, arr) =>
-      DwResult(k, graft.stats.StatTests.durbinWatson(arr))
+      ts: String = "ts_nanos", value: String = "value"): Dataset[DwResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      Some(DwResult(k, graft.stats.StatTests.durbinWatson(arr)))
     }
-  }
 
   /** Breusch-Godfrey serial-correlation test of each series regressed on a
     * linear trend. */
   def breuschGodfreyAll(df: DataFrame, lags: Int = 2, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val x = Array.tabulate(arr.length)(i => Array(i.toDouble))
         val (s, p) = graft.stats.StatTests.breuschGodfrey(arr, x, lags)
         Some(TestResult(k, s, p))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   /** Breusch-Pagan heteroskedasticity test of each series vs a linear trend. */
   def breuschPaganAll(df: DataFrame, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    grouped(df, key, ts, value).flatMap { case (k, arr) =>
-      try {
+      ts: String = "ts_nanos", value: String = "value"): Dataset[TestResult] =
+    PerSeries(df, key, ts, value) { (k, _, arr) =>
+      skipOnFailure {
         val x = Array.tabulate(arr.length)(i => Array(i.toDouble))
         val (s, p) = graft.stats.StatTests.breuschPagan(arr, x)
         Some(TestResult(k, s, p))
-      } catch { case _: Throwable => None }
+      }
     }
-  }
 
   /** Per-key AR(p) [[TimeSeriesFilter]] application: fit by least squares,
     * then remove the time-dependent effects through the trait interface
@@ -345,52 +254,33 @@ object ModelOps {
     * models/Autoregression.scala:56-77 removeTimeDependentEffects). Emits
     * one (key, ts, residual) row per input observation. */
   def arFilterResiduals(df: DataFrame, p: Int, key: String = "key",
-      ts: String = "ts_nanos", value: String = "value"): Dataset[FilteredPoint] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    groupedWithTs(df, key, ts, value).flatMap { case (k, tss, arr) =>
-      try {
+      ts: String = "ts_nanos", value: String = "value"): Dataset[FilteredPoint] =
+    PerSeries(df, key, ts, value) { (k, tss, arr) =>
+      skipOnFailure {
         val model = Autoregression.fitModel(arr, p)
         val resid = model.removeTimeDependentEffects(arr)
         // round-trip through the TimeSeriesFilter trait surface: filter
         // (= addTimeDependentEffects into dest) must restore the series
         // (up to the one rounding step (x - pred) + pred re-introduces)
         val restored = (model: TimeSeriesFilter).filter(resid, new Array[Double](arr.length))
-        tss.indices.iterator.map { i =>
+        tss.indices.map { i =>
           val ok = math.abs(restored(i) - arr(i)) <= 1e-9 * (1.0 + math.abs(arr(i)))
           FilteredPoint(k, tss(i), if (ok) resid(i) else Double.NaN)
         }
-      } catch { case _: Throwable => Iterator.empty }
+      }
     }
-  }
 
   /** Per-key ARX(p, xMaxLag) least-squares fit of y on its own lags and one
     * exogenous regressor column (reference models/AutoregressionX.scala:
     * 48-130). Input rows carry (key, ts, y, x) co-sampled. */
   def fitArx(df: DataFrame, p: Int, xMaxLag: Int, includeCurrentX: Boolean,
       key: String = "key", ts: String = "ts_nanos", y: String = "y",
-      x: String = "x"): Dataset[ArxFit] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.filter(col(y).isNotNull && col(x).isNotNull)
-      .select(col(key).cast("string").as("key"), col(ts).cast("long").as("ts"),
-        col(y).cast("double").as("y"), col(x).cast("double").as("x"))
-      .as[(String, Long, Double, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val pts = it.toArray.sortBy(_._2)
-        try {
-          val m = AutoregressionX.fitModel(pts.map(_._3),
-            pts.map(pt => Array(pt._4)), p, xMaxLag, includeCurrentX)
-          Iterator.single(ArxFit(k, m.c, m.arCoefs.toSeq, m.xCoefs(0).toSeq))
-        } catch { case _: Throwable => Iterator.empty }
+      x: String = "x"): Dataset[ArxFit] =
+    PerSeries.rows(df, key, ts, Seq(y, x)) { (k, _, yx) =>
+      skipOnFailure {
+        val m = AutoregressionX.fitModel(yx.map(_(0)), yx.map(r => Array(r(1))),
+          p, xMaxLag, includeCurrentX)
+        Some(ArxFit(k, m.c, m.arCoefs.toSeq, m.xCoefs(0).toSeq))
       }
-  }
-
-  /** Median inter-observation gap (forecast timestamp extrapolation). */
-  private def medianStep(tss: Array[Long]): Long =
-    if (tss.length > 1) {
-      val steps = tss.sliding(2).map(w => w(1) - w(0)).toArray.sorted
-      steps(steps.length / 2)
-    } else 1L
+    }
 }

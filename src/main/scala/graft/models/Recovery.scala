@@ -870,7 +870,7 @@ object Recovery {
     val rows = seeds3.flatMap { case (k, _) =>
       val agree =
         math.abs(lag1(k) - closed(k)) / math.max(math.abs(closed(k)), 1e-12) < 1e-6
-      // measured (GrangerProbe): fwd 511-549, rev 0.30-1.02 across seeds;
+      // measured: fwd 511-549, rev 0.30-1.02 across the three seeds;
       // bounds with ~10x/6x margin; 6.91 is the F(2,inf) 0.1% critical value
       Seq((k, "x_causes_y_detected", fwd(k) > 50.0),
         (k, "reverse_direction_kept", rev(k) < 6.91),
@@ -902,7 +902,7 @@ object Recovery {
   def rGoldens(s: SparkSession): DataFrame = run(s, seeds1, rGoldenKernel)
   def egarch(s: SparkSession): DataFrame = run(s, seeds3, egarchKernel)
 
-  /** All kernels, locally (no Spark) — used by the probe and the spec. */
+  /** All kernels, locally (no Spark) — used by the spec. */
   def allLocal(): Seq[(String, Seq[Check])] = Seq(
     "arima" -> seeds3.flatMap(c => arimaKernel(c._1, c._2)),
     "ar" -> seeds3.flatMap(c => arKernel(c._1, c._2)),
@@ -918,44 +918,4 @@ object Recovery {
     "spline" -> seeds1.flatMap(c => splineKernel(c._1, c._2)),
     "rgolden" -> seeds1.flatMap(c => rGoldenKernel(c._1, c._2)),
     "egarch" -> seeds3.flatMap(c => egarchKernel(c._1, c._2)))
-}
-
-/** Dev probe: print the mr15 F statistics per seed (bound calibration). */
-object GrangerProbe {
-  def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    import s.implicits._
-    val sims = Recovery.seeds3.flatMap { case (k, seed) =>
-      val r = new MersenneTwister(seed)
-      var x1 = 0.0; var x2 = 0.0; var y1 = 0.0
-      (0 until 3000).map { t =>
-        val nx = 0.5 * x1 + r.nextGaussian() * 0.5
-        val ny = 0.3 * y1 + 0.4 * x1 + 0.25 * x2 + r.nextGaussian() * 0.5
-        x2 = x1; x1 = nx; y1 = ny
-        (k, t.toLong, ny, nx)
-      }
-    }
-    val df = sims.toDF("key", "ts_nanos", "y", "x")
-    def show(tag: String, d: org.apache.spark.sql.DataFrame): Unit =
-      d.collect().sortBy(_.getString(0)).foreach(r =>
-        println(f"$tag ${r.getString(0)} f=${r.getAs[Double]("f_stat")}%.3f"))
-    show("fwd p2", VectorAR.grangerLagP(df, 2))
-    show("rev p2", VectorAR.grangerLagP(df, 2, y = "x", x = "y"))
-    show("fwd p1", VectorAR.grangerLagP(df, 1))
-    graft.ts.TimeSeriesOps.grangerF(df).collect().sortBy(_.getString(0))
-      .foreach(r => println(f"closed ${r.getString(0)} f=${r.getAs[Double]("granger_f")}%.3f"))
-    s.stop()
-  }
-}
-
-/** Dev probe: print every check with its observed error (tolerance calibration). */
-object RecoveryProbe {
-  def main(args: Array[String]): Unit = {
-    for ((group, checks) <- Recovery.allLocal(); c <- checks) {
-      val flag = if (c.ok) "ok  " else "FAIL"
-      println(f"$flag $group%-16s ${c.key}%-4s ${c.check}%-26s err=${c.err}%.6f")
-    }
-  }
 }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
  * Gram matrix serves all n equations; Lütkepohl, "New Introduction to
  * Multiple Time Series Analysis", ch. 3).
  *
- * Scale design: one `groupByKey(key)` shuffle; each task streams its
- * series once, accumulating the (1+np)×(1+np) Gram matrix and the
+ * Scale design: one [[PerSeries]] lift (one shuffle on the key); each task
+ * streams its series once, accumulating the (1+np)×(1+np) Gram matrix and the
  * (1+np)×n cross-moment matrix — O((np)²) memory per series regardless of
  * length, no T×m design matrix materialized — then solves the normal
  * equations locally by Gaussian elimination with partial pivoting (no
@@ -47,13 +47,10 @@ object VectorAR {
       key: String = "key", ts: String = "ts_nanos"): DataFrame = {
     require(p >= 1, "p >= 1")
     require(valueCols.nonEmpty, "valueCols must be non-empty")
-    val spark = df.sparkSession
-    import spark.implicits._
     val names = valueCols.toArray
     val n = names.length
-    gathered(df, p, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      fitLocal(rows.map(_._3.toArray), p) match {
+    PerSeries.rows(df, key, ts, valueCols) { (k, _, y) =>
+      fitLocal(y, p) match {
         case Some(beta) =>
           for (j <- 0 until n; r <- 0 until beta.length) yield {
             if (r == 0) VarpCoef(k, names(j), "c", 0, beta(0)(j))
@@ -74,38 +71,18 @@ object VectorAR {
   def varpForecast(df: DataFrame, p: Int, h: Int, valueCols: Seq[String],
       key: String = "key", ts: String = "ts_nanos"): DataFrame = {
     require(h >= 1, "h >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
     val names = valueCols.toArray
     val n = names.length
-    gathered(df, p, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      val y = rows.map(_._3.toArray)
+    PerSeries.rows(df, key, ts, valueCols) { (k, tss, y) =>
       fitLocal(y, p) match {
         case Some(beta) =>
-          val tss = rows.map(_._2)
-          val step = if (tss.length > 1) {
-            val steps = tss.sliding(2).map(w => w(1) - w(0)).toArray.sorted
-            steps(steps.length / 2)
-          } else 1L
+          val step = PerSeries.medianStep(tss)
           // ring of the last p observations, newest first after reverse
           var hist = y.takeRight(p).reverse.toVector // hist(0) = y_{t}, hist(1) = y_{t-1}, ...
           val out = collection.mutable.ArrayBuffer.empty[VarpForecast]
           var s = 1
           while (s <= h) {
-            val next = new Array[Double](n)
-            var j = 0
-            while (j < n) {
-              var v = beta(0)(j)
-              var l = 1
-              while (l <= p) {
-                var i = 0
-                while (i < n) { v += beta(1 + (l - 1) * n + i)(j) * hist(l - 1)(i); i += 1 }
-                l += 1
-              }
-              next(j) = v
-              j += 1
-            }
+            val next = predictNext(beta, hist, n, p)
             val fts = tss.last + step * s
             var j2 = 0
             while (j2 < n) {
@@ -138,12 +115,9 @@ object VectorAR {
   def grangerLagP(df: DataFrame, p: Int, key: String = "key",
       ts: String = "ts_nanos", y: String = "y", x: String = "x"): DataFrame = {
     require(p >= 1, "p >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    gathered(df, p, Seq(y, x), key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      val ys = rows.map(_._3(0).toDouble) // (y, x) order fixed by the select
-      val xs = rows.map(_._3(1).toDouble)
+    PerSeries.rows(df, key, ts, Seq(y, x)) { (k, _, yx) =>
+      val ys = yx.map(_(0))
+      val xs = yx.map(_(1))
       val tTot = ys.length
       val mU = 1 + 2 * p
       val nObs = tTot - p
@@ -204,18 +178,6 @@ object VectorAR {
         res.filter(r => !r.f_stat.isNaN && !r.f_stat.isInfinite).toSeq
       }
     }.toDF()
-  }
-
-  /** (key, ts, values) gathering shared by fit and forecast. */
-  private def gathered(df: DataFrame, p: Int, valueCols: Seq[String],
-      key: String, ts: String) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.filter(valueCols.map(c => col(c).isNotNull).reduce(_ && _))
-      .select(col(key).cast("string").as("_1"), col(ts).cast("long").as("_2"),
-        array(valueCols.map(c => col(c).cast("double")): _*).as("_3"))
-      .as[(String, Long, Seq[Double])]
-      .groupByKey(_._1)
   }
 
   /**
@@ -346,11 +308,8 @@ object VectorAR {
       key: String = "key", ts: String = "ts_nanos"): DataFrame = {
     require(pmax >= 1, "pmax >= 1")
     require(valueCols.nonEmpty, "valueCols must be non-empty")
-    val spark = df.sparkSession
-    import spark.implicits._
-    gathered(df, pmax, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      icsLocal(rows.map(_._3.toArray), pmax).map { c => c.copy(key = k) }
+    PerSeries.rows(df, key, ts, valueCols) { (k, _, y) =>
+      icsLocal(y, pmax).map { c => c.copy(key = k) }
     }.toDF()
   }
 
@@ -475,13 +434,10 @@ object VectorAR {
   def varpIrf(df: DataFrame, p: Int, h: Int, valueCols: Seq[String],
       key: String = "key", ts: String = "ts_nanos"): DataFrame = {
     require(h >= 0, "h >= 0")
-    val spark = df.sparkSession
-    import spark.implicits._
     val names = valueCols.toArray
     val n = names.length
-    gathered(df, p, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      fitWithSigma(rows.map(_._3.toArray), p) match {
+    PerSeries.rows(df, key, ts, valueCols) { (k, _, y) =>
+      fitWithSigma(y, p) match {
         case Some((beta, sigma, _)) =>
           cholLower(sigma) match {
             case Some(pl) =>
@@ -515,13 +471,10 @@ object VectorAR {
   def varpFevd(df: DataFrame, p: Int, h: Int, valueCols: Seq[String],
       key: String = "key", ts: String = "ts_nanos"): DataFrame = {
     require(h >= 1, "h >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
     val names = valueCols.toArray
     val n = names.length
-    gathered(df, p, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      fitWithSigma(rows.map(_._3.toArray), p) match {
+    PerSeries.rows(df, key, ts, valueCols) { (k, _, y) =>
+      fitWithSigma(y, p) match {
         case Some((beta, sigma, _)) =>
           cholLower(sigma) match {
             case Some(pl) =>
@@ -566,20 +519,12 @@ object VectorAR {
     require(h >= 1, "h >= 1")
     require(level > 0 && level < 1, "0 < level < 1")
     val z = normalQuantile(0.5 + level / 2)
-    val spark = df.sparkSession
-    import spark.implicits._
     val names = valueCols.toArray
     val n = names.length
-    gathered(df, p, valueCols, key, ts).flatMapGroups { (k, it) =>
-      val rows = it.toArray.sortBy(_._2)
-      val y = rows.map(_._3.toArray)
+    PerSeries.rows(df, key, ts, valueCols) { (k, tss, y) =>
       fitWithSigma(y, p) match {
         case Some((beta, sigma, _)) =>
-          val tss = rows.map(_._2)
-          val step = if (tss.length > 1) {
-            val steps = tss.sliding(2).map(w => w(1) - w(0)).toArray.sorted
-            steps(steps.length / 2)
-          } else 1L
+          val step = PerSeries.medianStep(tss)
           val phis = maCoefficients(beta, n, p, h - 1)
           // iterated point forecast — the varpForecast recursion
           var hist = y.takeRight(p).reverse.toVector
@@ -587,19 +532,7 @@ object VectorAR {
           val out = collection.mutable.ArrayBuffer.empty[VarpForecastInterval]
           var s = 1
           while (s <= h) {
-            val next = new Array[Double](n)
-            var j = 0
-            while (j < n) {
-              var v = beta(0)(j)
-              var l = 1
-              while (l <= p) {
-                var i = 0
-                while (i < n) { v += beta(1 + (l - 1) * n + i)(j) * hist(l - 1)(i); i += 1 }
-                l += 1
-              }
-              next(j) = v
-              j += 1
-            }
+            val next = predictNext(beta, hist, n, p)
             // MSE(s) diagonal += (Φ_{s−1} Σ Φ_{s−1}')_ii
             val ph = phis(s - 1)
             var i = 0
@@ -629,6 +562,26 @@ object VectorAR {
         case None => Seq.empty[VarpForecastInterval]
       }
     }.toDF()
+  }
+
+  /** One-step VAR(p) prediction c + Σ_l A_l·y_{t+1−l} from the last p
+    * observations, newest first (`hist(0)` = y_t). */
+  private def predictNext(beta: Array[Array[Double]], hist: Vector[Array[Double]],
+      n: Int, p: Int): Array[Double] = {
+    val next = new Array[Double](n)
+    var j = 0
+    while (j < n) {
+      var v = beta(0)(j)
+      var l = 1
+      while (l <= p) {
+        var i = 0
+        while (i < n) { v += beta(1 + (l - 1) * n + i)(j) * hist(l - 1)(i); i += 1 }
+        l += 1
+      }
+      next(j) = v
+      j += 1
+    }
+    next
   }
 
   /** Standard-normal quantile (Acklam's rational approximation, |ε| <
