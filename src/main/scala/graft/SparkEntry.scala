@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{DateTimeIndex, Frequency}
 import graft.models.PerSeries
+import graft.streaming.Replay
 import graft.ts.{RollAlign, TimeSeriesOps => TS}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -1951,18 +1952,16 @@ object SparkEntry {
       val (lo, hi) = dayBoundsUs(Tables.events(s, dir))
       val index = dayIndexUs(lo, hi)
       val series = TS.toSeries(daily, index, key = "key", ts = "day_us", value = "value")
-      // per-run temp dir (ADVICE r16): a fixed path derived from the SF dir
-      // raced concurrent runs and was never cleaned up
-      val path = java.nio.file.Files.createTempDirectory("graft_ts51_").toString
-      graft.io.TimeSeriesIO.writeSeriesParquet(series, index, path)
-      val (back, backIdx) = graft.io.TimeSeriesIO.readSeriesParquet(s, path)
-      val res = TS.fromSeries(back, backIdx, key = "key")
-        .select(col("key"), col("ts_nanos").as("day_us"),
-          round(col("value"), 6).as("value"),
-          lit(backIdx.tag == index.tag).as("index_match"))
-        .localCheckpoint() // materialize before the fixture is removed
-      deleteRecursively(path)
-      res
+      // per-run scratch dir (ADVICE r16): a fixed path derived from the SF
+      // dir raced concurrent runs and was never cleaned up
+      Replay.roundTrip("graft_ts51_") { path =>
+        graft.io.TimeSeriesIO.writeSeriesParquet(series, index, path)
+        val (back, backIdx) = graft.io.TimeSeriesIO.readSeriesParquet(s, path)
+        TS.fromSeries(back, backIdx, key = "key")
+          .select(col("key"), col("ts_nanos").as("day_us"),
+            round(col("value"), 6).as("value"),
+            lit(backIdx.tag == index.tag).as("index_match"))
+      }
     }),
     "ts52_io_csv_roundtrip" -> ((s, dir) => {
       // CSV (key,v0,v1,...) + _index sidecar round trip (reference CSV
@@ -1971,16 +1970,14 @@ object SparkEntry {
       val (lo, hi) = dayBoundsUs(Tables.events(s, dir))
       val index = dayIndexUs(lo, hi)
       val series = TS.toSeries(daily, index, key = "key", ts = "day_us", value = "value")
-      val path = java.nio.file.Files.createTempDirectory("graft_ts52_").toString
-      graft.io.TimeSeriesIO.writeSeriesCsv(series, index, path)
-      val (back, backIdx) = graft.io.TimeSeriesIO.readSeriesCsv(s, path)
-      val res = TS.fromSeries(back, backIdx, key = "key")
-        .select(col("key"), col("ts_nanos").as("day_us"),
-          round(col("value"), 6).as("value"),
-          lit(backIdx.tag == index.tag).as("index_match"))
-        .localCheckpoint()
-      deleteRecursively(path)
-      res
+      Replay.roundTrip("graft_ts52_") { path =>
+        graft.io.TimeSeriesIO.writeSeriesCsv(series, index, path)
+        val (back, backIdx) = graft.io.TimeSeriesIO.readSeriesCsv(s, path)
+        TS.fromSeries(back, backIdx, key = "key")
+          .select(col("key"), col("ts_nanos").as("day_us"),
+            round(col("value"), 6).as("value"),
+            lit(backIdx.tag == index.tag).as("index_match"))
+      }
     }),
     "ts53_yahoo_parse" -> ((s, dir) =>
       // Yahoo OHLCV CSV parse of the GOOG fixture (reference
@@ -2098,37 +2095,25 @@ object SparkEntry {
 
     // ---------------- r17: streaming batch-parity replays (VERDICT r16 #5)
     // — the Structured Streaming surfaces run as REAL streams (readStream →
-    // operator → writeStream, Trigger.AvailableNow) over the SF table and
-    // the driver hash-checks the emitted result against the BATCH
+    // operator → sink, availableNow trigger) over the SF table and the
+    // oracle compare hash-checks the emitted result against the BATCH
     // semantics in DuckDB. Certifies that a streaming deployment of the
-    // operator converges to the batch answer on a full replay. ----------------
+    // operator converges to the batch answer on a full replay. Fixture,
+    // stream, state parallelism, sink and cleanup: graft.streaming.Replay.
     "st01_streaming_resample_replay" -> ((s, dir) => {
       // daily tumbling sum per user through StreamingResample.tumblingModes
       // (closed-left, stamp-left), replayed availableNow; complete mode +
       // an effectively-infinite watermark so no replay row is "late"
       val ev = Tables.events(s, dir)
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st01_").toString
-      ev.write.mode("overwrite").parquet(s"$tmp/events")
-      val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/events")
-      val out = graft.streaming.StreamingResample.tumblingModes(stream,
-        dayUsTick, sum(_), closedRight = false, stampRight = false,
-        watermark = "36500 days", key = "user_id")
-      val sink = s"st01_sink_${System.nanoTime}"
-      withReplayStateParallelism(s, s"$tmp/events") {
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("complete")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      // the memory sink holds only the user x day aggregate (bounded well
-      // below the input); the replay fixture is per-run and removed here
-      val res = s.table(sink).select(col("user_id"),
-        unix_micros(col("bucket_ts")).as("day_us"),
-        round(col("value"), 4).as("sum_value")).localCheckpoint()
-      deleteRecursively(tmp)
-      res
+      // the sink holds only the user x day aggregate (bounded well below
+      // the input)
+      Replay.run(s, "graft_st01_", "complete", ev) { stream =>
+        graft.streaming.StreamingResample.tumblingModes(stream,
+          dayUsTick, sum(_), closedRight = false, stampRight = false,
+          watermark = "36500 days", key = "user_id")
+      }.select(col("user_id"), unix_micros(col("bucket_ts")).as("day_us"),
+        round(col("value"), 4).as("sum_value"))
     }),
     "st02_streaming_dedup_replay" -> ((s, dir) => {
       // exact streaming dedup (dropDuplicatesWithinWatermark on the
@@ -2141,23 +2126,10 @@ object SparkEntry {
         .select(col("doc_id"), col("text"),
           timestamp_micros(lit(1577836800000000L) + col("doc_id") * 1000000L)
             .as("event_time"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st02_").toString
-      docs.write.mode("overwrite").parquet(s"$tmp/docs")
-      val stream = s.readStream.schema(docs.schema).parquet(s"$tmp/docs")
-      val out = graft.streaming.StreamingDedup.streamingExactDedup(
-        stream, "text", "event_time", "36500 days")
-      val sink = s"st02_sink_${System.nanoTime}"
-      withReplayStateParallelism(s, s"$tmp/docs") {
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val res = s.table(sink).groupBy("fingerprint")
-        .agg(count(lit(1)).as("n_survivors")).localCheckpoint()
-      deleteRecursively(tmp)
-      res
+      Replay.run(s, "graft_st02_", "append", docs) { stream =>
+        graft.streaming.StreamingDedup.streamingExactDedup(
+          stream, "text", "event_time", "36500 days")
+      }.groupBy("fingerprint").agg(count(lit(1)).as("n_survivors"))
     }),
     "st03_streaming_hh_replay" -> ((s, dir) => {
       // sharded Space-Saving heavy hitters (StreamingSketch) replayed
@@ -2168,27 +2140,14 @@ object SparkEntry {
       // bit-for-bit, with every error bound at 0. Streaming twin of the
       // qs03 batch heavy-hitter certification.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st03_").toString
-      docs.write.mode("overwrite").parquet(s"$tmp/docs")
-      val stream = s.readStream.schema(docs.schema).parquet(s"$tmp/docs")
-      val out = graft.streaming.StreamingSketch.streamingHeavyHitters(
-        stream, "text", shards = 4, capacity = 64)
-      val sink = s"st03_sink_${System.nanoTime}"
-      withReplayStateParallelism(s, s"$tmp/docs") {
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("update")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
       // update-mode emissions are cumulative full-shard summaries, so the
       // max count per token is its final count (each token lives in
       // exactly one shard); max(err) must be 0 — the no-eviction pin
-      val res = s.table(sink).groupBy("token")
+      Replay.run(s, "graft_st03_", "update", docs) { stream =>
+        graft.streaming.StreamingSketch.streamingHeavyHitters(
+          stream, "text", shards = 4, capacity = 64).toDF()
+      }.groupBy("token")
         .agg(max(col("count")).as("n"), max(col("err")).as("max_err"))
-        .localCheckpoint()
-      deleteRecursively(tmp)
-      res
     }),
     "st05_streaming_idx_neardup_digest" -> ((s, dir) => {
       // r18: the streaming half of the incremental-dedup index story,
@@ -2197,32 +2156,21 @@ object SparkEntry {
       // reduced to a pair digest whose oracle constant is DERIVED from the
       // dd03 golden (its 13 pairs with exactly one side < 250), the same
       // derivation contract as dd23
-      val docs = Tables.documents(s, dir)
-      val index = graft.text.Dedup.minhashIndex(docs.filter(col("doc_id") < 250))
-      val batch = docs.filter(col("doc_id") >= 250)
+      val batch = Tables.documents(s, dir).filter(col("doc_id") >= 250)
         .select(col("doc_id"), col("text"),
           timestamp_micros(lit(1577836800000000L) + col("doc_id") * 1000000L)
             .as("event_time"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st05_").toString
-      batch.write.mode("overwrite").parquet(s"$tmp/docs")
-      val stream = s.readStream.schema(batch.schema).parquet(s"$tmp/docs")
-      val out = graft.streaming.StreamingDedup.streamingNearDupAgainstIndex(
-        stream, index, watermark = "36500 days",
-        k = 3, numHashes = 64, bands = 16, threshold = 0.3)
-      val sink = s"st05_sink_${System.nanoTime}"
-      withReplayStateParallelism(s, s"$tmp/docs") {
-        val q = out.writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      val pairs = Replay.run(s, "graft_st05_", "append", batch) { stream =>
+        // the index side input is built on the stream's own session
+        val index = graft.text.Dedup.minhashIndex(
+          Tables.documents(stream.sparkSession, dir).filter(col("doc_id") < 250))
+        graft.streaming.StreamingDedup.streamingNearDupAgainstIndex(
+          stream, index, watermark = "36500 days",
+          k = 3, numHashes = 64, bands = 16, threshold = 0.3)
       }
-      val res = pairDigest(s.table(sink),
+      pairDigest(pairs,
         format_string("%d,%d,%.6f", least(col("stream_id"), col("corpus_id")),
           greatest(col("stream_id"), col("corpus_id")), col("jaccard")))
-        .localCheckpoint()
-      deleteRecursively(tmp)
-      res
     }),
     "st04_streaming_late_drop" -> ((s, dir) => {
       // r18 (VERDICT r17 #1): watermark EVICTION and late-data DROPPING on a
@@ -2239,9 +2187,8 @@ object SparkEntry {
       // drop/evict boundary diverged from the documented contract. Rows
       // whose bucket sits exactly ON the threshold stay in phase 1, so the
       // check is insensitive to the filter's < vs <= strictness.
-      // (foreachBatch->parquet sink because the memory sink refuses
-      // checkpoint recovery; update-mode emissions are cumulative per
-      // group, so max(count) per group is its final value.)
+      // (update-mode emissions are cumulative per group, so max(count) per
+      // group is its final value.)
       val ev = Tables.events(s, dir)
         .withColumn("bucket", col("ts_us") - pmod(col("ts_us"), lit(dayUsTick)))
       val maxB = ev.agg(max("bucket")).head().getLong(0)
@@ -2250,34 +2197,16 @@ object SparkEntry {
         col("bucket") =!= wmThresh
       val feed = ev.select(col("user_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("value"), lateCond.as("late"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st04_").toString
-      feed.filter(!col("late")).drop("late").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      val inSchema = feed.drop("late").schema
-      def replay(): Unit = withReplayStateParallelism(s, s"$tmp/in") {
-        val stream = s.readStream.schema(inSchema).parquet(s"$tmp/in")
-        val out = graft.streaming.StreamingResample.tumblingModes(stream,
+      // phase 1: on-time rows, watermark advances to maxB - 2 days;
+      // phase 2: late rows against the recovered watermark
+      Replay.run(s, "graft_st04_", "update",
+          feed.filter(!col("late")).drop("late").coalesce(1),
+          feed.filter(col("late")).drop("late").coalesce(1)) { stream =>
+        graft.streaming.StreamingResample.tumblingModes(stream,
           dayUsTick, count(_), closedRight = false, stampRight = false,
           watermark = "2 days", key = "user_id")
-        val q = out.writeStream
-          .outputMode("update")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            df.write.mode("append").parquet(s"$tmp/out")
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      replay() // phase 1: on-time rows, watermark advances to maxB - 2 days
-      feed.filter(col("late")).drop("late").coalesce(1)
-        .write.mode("append").parquet(s"$tmp/in")
-      replay() // phase 2: late rows against the recovered watermark
-      val res = s.read.parquet(s"$tmp/out")
-        .groupBy(col("user_id"), unix_micros(col("bucket_ts")).as("day_us"))
+      }.groupBy(col("user_id"), unix_micros(col("bucket_ts")).as("day_us"))
         .agg(max(col("value")).as("n_events"))
-        .localCheckpoint()
-      deleteRecursively(tmp)
-      res
     }),
     "st06_streaming_lateness_replay" -> ((s, dir) => {
       // r20 (VERDICT r19 #4): the same two-phase checkpointed drop/evict
@@ -2292,89 +2221,21 @@ object SparkEntry {
       // saw), mirrored in the oracle. A hash mismatch means the lateness
       // compensation diverged from the documented raw-lateness contract.
       val widthUs = 2 * dayUsTick
-      val ev = Tables.events(s, dir)
-        .withColumn("bucket", col("ts_us") - pmod(col("ts_us"), lit(widthUs)))
       val lateCond = pmod(col("user_id"), lit(5)) === 3
-      val feed = ev.select(col("user_id"),
+      val feed = Tables.events(s, dir).select(col("user_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("value"), lateCond.as("late"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st06_").toString
-      feed.filter(!col("late")).drop("late").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      val inSchema = feed.drop("late").schema
-      def replay(): Unit = withReplayStateParallelism(s, s"$tmp/in") {
-        val stream = s.readStream.schema(inSchema).parquet(s"$tmp/in")
-        val out = graft.streaming.StreamingResample.tumblingModesLateness(
+      // phase 1: on-time rows advance the watermark; phase 2: late rows
+      // against the recovered widened watermark
+      Replay.run(s, "graft_st06_", "update",
+          feed.filter(!col("late")).drop("late").coalesce(1),
+          feed.filter(col("late")).drop("late").coalesce(1)) { stream =>
+        graft.streaming.StreamingResample.tumblingModesLateness(
           stream, widthUs, count(_), closedRight = false, stampRight = false,
           lateness = "1 day", key = "user_id")
-        val q = out.writeStream
-          .outputMode("update")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            df.write.mode("append").parquet(s"$tmp/out")
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      replay() // phase 1: on-time rows advance the watermark
-      feed.filter(col("late")).drop("late").coalesce(1)
-        .write.mode("append").parquet(s"$tmp/in")
-      replay() // phase 2: late rows against the recovered widened watermark
-      val res = s.read.parquet(s"$tmp/out")
-        .groupBy(col("user_id"), unix_micros(col("bucket_ts")).as("bucket_us"))
+      }.groupBy(col("user_id"), unix_micros(col("bucket_ts")).as("bucket_us"))
         .agg(max(col("value")).as("n_events"))
-        .localCheckpoint()
-      deleteRecursively(tmp)
-      res
     })
   )
-
-  /** r22 (guide §2: derive partitioning from input size, never a constant
-    * tuned for local or cluster mode; VERDICT r21 #2 "state-store
-    * partitioning derived from data not config"): run a replay stream with
-    * its state-store parallelism scaled to the FIXTURE'S actual bytes.
-    *
-    * AQE cannot coalesce stateful streaming exchanges — the state partition
-    * count is snapshotted into the checkpoint at first query start — so the
-    * decision AQE would make is made here from the data: one state
-    * partition per ~32 MB of replay input, floored at 1, CAPPED at the
-    * session's configured `spark.sql.shuffle.partitions` (the
-    * cluster-scaled value). At 100 TB the cap binds and behavior is
-    * unchanged; at a bounded replay this stops every micro-batch from
-    * paying per-partition state-store file I/O (delta + snapshot +
-    * checksum files per partition per batch) and task scheduling for
-    * partitions that hold a few KB of state each. Restart phases (st04/
-    * st06 phase 2) recover the checkpointed count regardless of the live
-    * conf, so the two-phase semantics are untouched. Results are invariant:
-    * partitioning never changes WHAT a keyed stateful operator computes,
-    * only where rows sit.
-    */
-  private def withReplayStateParallelism[T](s: SparkSession, fixtureDir: String)
-      (body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(fixtureDir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case _: Exception => Long.MaxValue } // unknown -> keep config
-    val derived = math.max(1L, math.min(old.toLong, bytes / (32L << 20) + 1L)).toInt
-    if (derived.toString != old) System.err.println(
-      s"[replay] state parallelism $old -> $derived ($bytes fixture bytes)")
-    s.conf.set(key, derived.toString)
-    try body finally s.conf.set(key, old)
-  }
-
-  /** Remove a per-run replay fixture directory (best-effort). */
-  private def deleteRecursively(path: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(path)
-    if (Files.exists(root)) {
-      val all = Files.walk(root).iterator().asScala.toSeq.reverse
-      all.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-    }
-  }
 
   /** DuckDB string literal composed to be byte-pure ASCII: any char outside
     * printable ASCII becomes `chr(<codepoint>)`. tx03 failed the driver's

@@ -4,6 +4,7 @@ import org.apache.commons.math3.random.MersenneTwister
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{avg, col, when}
 
+import graft.CheckRows
 import graft.stats.StatTests
 
 /**
@@ -465,9 +466,8 @@ object Recovery {
   private def run(s: SparkSession, configs: Seq[(String, Long)],
       kernel: (String, Long) => Seq[Check]): DataFrame = {
     import s.implicits._
-    s.createDataset(configs).repartition(configs.size)
-      .flatMap { case (k, seed) => kernel(k, seed).map(c => (c.key, c.check, c.ok)) }
-      .toDF("key", "check_name", "ok")
+    CheckRows.frame(s.createDataset(configs).repartition(configs.size)
+      .flatMap { case (k, seed) => kernel(k, seed).map(c => (c.key, c.check, c.ok)) })
   }
 
   private[graft] val seeds3 = Seq(("s1", 101L), ("s2", 202L), ("s3", 303L))
@@ -540,7 +540,7 @@ object Recovery {
       val (t, tol) = truth(name)
       (k, name, math.abs(fits(k).getAs[Double](name) - t) < tol)
     }
-    rows.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, rows)
   }
 
   /** mr14 — trivariate VAR(2) recovery, certifying the DISTRIBUTED
@@ -604,7 +604,7 @@ object Recovery {
       Seq((k, "a1_close", err(a1, 1) < 0.08), (k, "a2_close", err(a2, 2) < 0.08),
         (k, "c_close", cErr < 0.5), (k, "forecast_matches_fit", fcErr < 1e-9))
     }
-    rows.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, rows)
   }
 
   /** mr16 — VAR order selection recovery through the DISTRIBUTED
@@ -666,7 +666,7 @@ object Recovery {
         (k, "best_aic_at_least_true", bA >= 2),
         (k, "sigma_matches_noise", math.abs(ics((k, bB))._1 - ldTruth) < 0.5))
     }
-    rows.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, rows)
   }
 
   /** mr17 — impulse-response / FEVD recovery through the DISTRIBUTED
@@ -770,7 +770,7 @@ object Recovery {
         (k, "interval_se1_matches_noise", se1Ok),
         (k, "interval_brackets_point", bracketOk))
     }
-    rows.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, rows)
   }
 
   /** mr18 — logistic-regression recovery through the DISTRIBUTED
@@ -837,7 +837,7 @@ object Recovery {
     val out = try perSeed.flatMap(Await.result(_, Duration.create(10, "min")))
       catch { case e: Throwable => pool.shutdownNow(); throw e }
       finally pool.shutdown()
-    out.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, out)
   }
 
   /** mr15 — lag-p Granger recovery through the DISTRIBUTED
@@ -876,16 +876,12 @@ object Recovery {
         (k, "reverse_direction_kept", rev(k) < 6.91),
         (k, "lag1_matches_closed_form", agree))
     }
-    rows.toDF("key", "check_name", "ok")
+    CheckRows.frame(s, rows)
   }
 
   /** Constant-SELECT DuckDB oracle: every (key, check) pair expected true. */
-  private[graft] def oracleFor(group: String): String = {
-    val rows = for ((k, _) <- keysOf(group); c <- checkNames(group))
-      yield s"('$k', '$c', true)"
-    "SELECT * FROM (VALUES " + rows.mkString(", ") +
-      ") AS t(key, check_name, ok)"
-  }
+  private[graft] def oracleFor(group: String): String =
+    CheckRows.oracle(for ((k, _) <- keysOf(group); c <- checkNames(group)) yield (k, c))
 
   def arima(s: SparkSession): DataFrame = run(s, seeds3, arimaKernel)
   def ar(s: SparkSession): DataFrame = run(s, seeds3, arKernel)

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.CheckRows
+
 /**
  * Embedding-column utilities beyond similarity search: per-group centroids
  * (cluster/label summaries, IVF-style codebook seeds) and 8-bit scalar
@@ -351,7 +353,6 @@ object Embeddings {
    */
   def pcaCertified(s: org.apache.spark.sql.SparkSession, dir: String,
       k: Int = 8): DataFrame = {
-    import s.implicits._
     val emb = graft.Tables.embeddings(s, dir)
     val (mean, comps, explained) = pcaBasis(emb, k)
     val nonInc = explained.sliding(2).forall(a => a(0) >= a(1) - 1e-12)
@@ -372,21 +373,15 @@ object Embeddings {
         .agg(sum(col("dv"))).head().getDouble(0)
       val lambda1 = explained(0) * totalVar
       val varMatch = math.abs(stats.getAs[Double]("v_0") - lambda1) <= 1e-6 * lambda1
-      Seq(
-        ("em06", "explained_nonincreasing", nonInc),
-        ("em06", "components_orthonormal", ortho),
-        ("em06", "projected_means_zero", meansZero),
-        ("em06", "pc1_variance_is_lambda1", varMatch)
-      ).toDF("key", "check_name", "ok")
+      CheckRows.frame(s, pcaChecks.zip(Seq(nonInc, ortho, meansZero, varMatch))
+        .map { case ((k, c), ok) => (k, c, ok) })
     } finally proj.unpersist(false)
   }
 
+  /** [[pcaCertified]]'s checks, in emit order. */
+  private val pcaChecks = Seq("explained_nonincreasing", "components_orthonormal",
+    "projected_means_zero", "pc1_variance_is_lambda1").map("em06" -> _)
+
   /** Constant-SELECT DuckDB oracle for [[pcaCertified]]. */
-  private[graft] val pcaOracle: String =
-    """SELECT * FROM (VALUES
-       ('em06', 'explained_nonincreasing', true),
-       ('em06', 'components_orthonormal', true),
-       ('em06', 'projected_means_zero', true),
-       ('em06', 'pc1_variance_is_lambda1', true)
-     ) AS t(key, check_name, ok)"""
+  private[graft] val pcaOracle: String = CheckRows.oracle(pcaChecks)
 }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{CheckRows, Tables}
 import graft.text.Dedup
 
 /**
@@ -20,11 +20,12 @@ import graft.text.Dedup
  * must": a banding bug, a broken verify filter, or a degraded quantizer
  * flips a boolean and the driver sees a red cell.
  *
- * Bounds are calibrated from measured recall at sf0.001/0.01/0.1 (see
- * [[RecallProbe]]) with ≥2x margin below the observed minimum, so they
- * certify the LSH/IVF/PQ math holds, not a lucky dataset. Checks that are
- * THEOREMS of the construction (MinHash/SimHash banding completeness at
- * high similarity, verify-step precision) use exact bounds.
+ * Bounds are calibrated from measured recall at sf0.001/0.01/0.1 (the
+ * figures sit next to each bound) with ≥2x margin below the observed
+ * minimum, so they certify the LSH/IVF/PQ math holds, not a lucky
+ * dataset. Checks that are THEOREMS of the construction (MinHash/SimHash
+ * banding completeness at high similarity, verify-step precision) use
+ * exact bounds.
  *
  * Scale note: truth sides are bounded by construction — top-k truth reuses
  * the broadcast-queries brute-force scan (10 query rows), pair truth runs
@@ -32,12 +33,6 @@ import graft.text.Dedup
  * queries cost O(subset²), constant in corpus size.
  */
 object Recall {
-
-  /** (key, check_name, ok) rows — same shape as [[graft.models.Recovery]]. */
-  private def checks(s: SparkSession, rows: Seq[(String, String, Boolean)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("key", "check_name", "ok")
-  }
 
   private def pairs(df: DataFrame): DataFrame = df.select("query_id", "neighbor_id")
 
@@ -90,7 +85,7 @@ object Recall {
         .agg(one(col("__t") === 1).as("total"),
           one(col("__t") === 1 && col("__a") === 1).as("hit")).head()
       val (total, hit) = (p.getLong(0), p.getLong(1))
-      checks(s, Seq(
+      CheckRows.frame(s, Seq(
         (key, "recall_ok", recallOk(hit, total, bound)),
         (key, "ranks_bounded", ranksBounded(approx, k))))
     } finally approx.unpersist(false)
@@ -149,7 +144,7 @@ object Recall {
             abs(col("__ce") - col("__cp")) > 1e-5).as("drift")).head()
       val (total, hit, scoreDrift) = (p.getLong(0), p.getLong(1), p.getLong(2))
       // measured recall 0.54-0.82 across sf0.001/0.01/0.1
-      checks(s, Seq(
+      CheckRows.frame(s, Seq(
         ("sm04", "recall_ok", recallOk(hit, total, 0.3)),
         ("sm04", "rerank_scores_exact", scoreDrift == 0L),
         ("sm04", "ranks_bounded", ranksBounded(approx, k))))
@@ -208,7 +203,7 @@ object Recall {
     // measured recall 1.0 at every sf (truth pairs sit at high jaccard,
     // where 16x4 banding is effectively complete); 0.1 certifies the
     // pipeline wiring survives a dataset regeneration with weaker pairs
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("dd03", "recall_ok", recallOk(hit, total, 0.1)),
       ("dd03", "high_sim_complete", p.getLong(3) == p.getLong(2)),
       ("dd03", "precision_exact", p.getLong(4) == 0L)))
@@ -245,7 +240,7 @@ object Recall {
         one(col("__a") === 1 && col("__t") === 0).as("fp")).head()
     val (total, hit) = (p.getLong(0), p.getLong(1))
     // measured recall 0.68-0.76 across sf0.001/0.01/0.1
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("dd04", "recall_ok", recallOk(hit, total, 0.3)),
       ("dd04", "h3_pigeonhole_complete", p.getLong(3) == p.getLong(2)),
       ("dd04", "precision_exact", p.getLong(4) == 0L)))
@@ -286,7 +281,7 @@ object Recall {
     val (total, hit) = (p.getLong(0), p.getLong(1))
     // measured recall 0.097-0.110 across sf0.001/0.01/0.1 — the ~8-11%
     // the 8-band x 8-bit collision probability predicts at cosine 0.2
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("dd06", "recall_ok", recallOk(hit, total, 0.03)),
       ("dd06", "precision_exact", p.getLong(2) == 0L)))
   }
@@ -401,7 +396,7 @@ object Recall {
         System.err.println(f"[recall] rc07 hit=$hit%4d hit2=$hit2%4d total=$total%4d")
       val coverageOk = total == 0 ||
         (total - p.getLong(5)).toDouble / total >= RC07_P2_BOUND
-      checks(s, Seq(
+      CheckRows.frame(s, Seq(
         ("sd01", "recall_ok", recallOk(hit, total, RC07_BOUND)),
         ("sd01", "recall_probe2_ok", recallOk(hit2, total, RC07_P2_BOUND)),
         ("sd01", "probe2_superset", p.getLong(4) == 0L),
@@ -470,7 +465,7 @@ object Recall {
       if (sys.env.contains("GRAFT_RECALL_DEBUG"))
         System.err.println(f"[recall] rc08 hit=$hit%4d total=$total%4d  r=${
           if (total == 0) 1.0 else hit.toDouble / total}%.3f")
-      checks(s, Seq(
+      CheckRows.frame(s, Seq(
         ("dd13", "recall_ok", recallOk(hit, total, RC08_BOUND)),
         ("dd13", "precision_exact", p.getLong(3) == 0L),
         ("dd13", "partition_exact", partitionOk)))
@@ -479,14 +474,14 @@ object Recall {
 
   // CONTAMINATED-ID recall (any one witness bucket-collides -> the id
   // drops) sits above rc06's pair recall at the same banding because one
-  // id has many witnesses; measured (RecallProbe) 0.186/0.206/0.262 at
+  // id has many witnesses; measured 0.186/0.206/0.262 at
   // sf0.01/0.001/0.1 on the UNCLUSTERED synthetic vectors (cosine ~0.2,
   // where the band math predicts ~10-25%; a real leaked benchmark sits
   // near cosine 1 where banding recall -> 1). Bound with >2x margin.
   private val RC08_BOUND = 0.08
 
   // measured co-cluster recall 0.393/0.436/0.424 at sf0.001/0.01/0.1
-  // (k=4 balanced predicts ~0.25+; see RecallProbe); bound set with ~5x
+  // (k=4 balanced predicts ~0.25+); bound set with ~5x
   // margin below the observed minimum
   private val RC07_BOUND = 0.08
   // nprobe=2 measured 0.928/0.926/0.941 at sf0.001/0.01/0.1 — boundary
@@ -527,16 +522,11 @@ object Recall {
     }.max)
     // planted cluster diameter <= sqrt(3 * 0.2^2) ~ 0.35
     val coverageOk = coverage < 0.4
-    checksK(s, Seq(
+    CheckRows.frame(s, Seq(
       ("smp10", "one_center_per_cluster", clustersHit),
       ("smp10", "radii_nonincreasing", radiiMono),
       ("smp10", "first_pick_is_min_id", firstMinId),
       ("smp10", "coverage_below_cluster_diameter", coverageOk)))
-  }
-
-  private def checksK(s: SparkSession, rows: Seq[(String, String, Boolean)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("key", "check_name", "ok")
   }
 
   /** Canonical check names per query — oracle VALUES lists come from these. */
@@ -561,33 +551,5 @@ object Recall {
       "smp10" -> "coverage_below_cluster_diameter"))
 
   /** Constant-SELECT DuckDB oracle: every (key, check) pair expected true. */
-  private[graft] def oracleFor(group: String): String = {
-    val rows = checkNames(group).map { case (k, c) => s"('$k', '$c', true)" }
-    "SELECT * FROM (VALUES " + rows.mkString(", ") + ") AS t(key, check_name, ok)"
-  }
-}
-
-/** Dev probe: print measured recalls at a given sf dir (bound calibration). */
-object RecallProbe {
-  def main(args: Array[String]): Unit = {
-    val dirs = if (args.nonEmpty) args.toSeq
-      else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = Tables.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (dir <- dirs) {
-      println(s"== $dir")
-      for ((name, fn) <- Seq[(String, (SparkSession, String) => DataFrame)](
-          "rc01_lsh" -> Recall.lsh, "rc02_ivf" -> Recall.ivf,
-          "rc03_pq" -> Recall.pq, "rc04_minhash" -> Recall.minhash,
-          "rc05_simhash" -> Recall.simhash, "rc06_embedding" -> Recall.embedding,
-          "rc07_semdedup" -> Recall.semdedup, "rc08_semdecon" -> Recall.semdecon)) {
-        fn(spark, dir).collect().foreach { r =>
-          println(f"$name%-14s ${r.getString(0)}%-5s ${r.getString(1)}%-24s ok=${r.getBoolean(2)}")
-        }
-      }
-    }
-    spark.stop()
-  }
+  private[graft] def oracleFor(group: String): String = CheckRows.oracle(checkNames(group))
 }

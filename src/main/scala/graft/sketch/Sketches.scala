@@ -3,7 +3,7 @@ package graft.sketch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{CheckRows, Tables}
 import graft.text.TextFunctions
 
 /**
@@ -35,11 +35,6 @@ import graft.text.TextFunctions
  */
 object Sketches {
 
-  private def checks(s: SparkSession, rows: Seq[(String, String, Boolean)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("key", "check_name", "ok")
-  }
-
   /** qs01 — HLL distinct counts vs exact, global and per-group.
     * rsd 0.05 ⇒ |est−exact|/exact within 0.15 (3σ) certifies the sketch;
     * the grouped variant additionally certifies partial-agg merge. */
@@ -62,7 +57,7 @@ object Sketches {
     val globalOk = rows.filter(isTotal).forall(_.getAs[Boolean]("ok")) &&
       rows.exists(isTotal)
     val groupedOk = rows.filterNot(isTotal).forall(_.getAs[Boolean]("ok"))
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("qs01", "hll_global_within_3rsd", globalOk),
       ("qs01", "hll_grouped_within_3rsd", groupedOk)))
   }
@@ -91,7 +86,7 @@ object Sketches {
       val atOrBelow = r.getAs[Long](s"at_$pct") / n
       ("qs02", s"gk_rank_q$pct", below <= q + eps && atOrBelow >= q - eps)
     }
-    checks(s, rows)
+    CheckRows.frame(s, rows)
   }
 
   /** qs03 — count–min token frequencies vs exact heavy-hitter counts.
@@ -114,7 +109,7 @@ object Sketches {
       sketch.estimateCount(r.getString(0)) >= r.getLong(1) }
     val overBounded = top.forall { r =>
       sketch.estimateCount(r.getString(0)) <= r.getLong(1) + slack }
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("qs03", "cms_no_underestimate", noUnder),
       ("qs03", "cms_overestimate_bounded", overBounded)))
   }
@@ -134,7 +129,7 @@ object Sketches {
     val absent = (1L to 10000L).map(maxKey + _)
     val noFalseNeg = present.forall(filter.mightContainLong)
     val fpRate = absent.count(filter.mightContainLong).toDouble / absent.size
-    checks(s, Seq(
+    CheckRows.frame(s, Seq(
       ("qs04", "bloom_no_false_negatives", noFalseNeg),
       ("qs04", "bloom_fpp_bounded", fpRate <= 0.05)))
   }
@@ -151,8 +146,5 @@ object Sketches {
       "qs04" -> "bloom_fpp_bounded"))
 
   /** Constant-SELECT DuckDB oracle: every (key, check) pair expected true. */
-  private[graft] def oracleFor(group: String): String = {
-    val rows = checkNames(group).map { case (k, c) => s"('$k', '$c', true)" }
-    "SELECT * FROM (VALUES " + rows.mkString(", ") + ") AS t(key, check_name, ok)"
-  }
+  private[graft] def oracleFor(group: String): String = CheckRows.oracle(checkNames(group))
 }
