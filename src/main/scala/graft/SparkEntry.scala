@@ -17,6 +17,25 @@ object SparkEntry {
 
   private val dayUsTick = 86400000000L
 
+  /** The pair source of cc01, dd20 and smp12: (id_a < id_b) with
+    * distinct-token Jaccard >= 0.5 over the first 200 documents, which the
+    * DuckDB oracles replay in SQL. Returns the token table and the pairs.
+    * The cheap id order is tested before the Jaccard, and the streamed side
+    * of the nested-loop join is spread over the cores (the slice arrives in
+    * one scan partition). */
+  private def jaccardSlicePairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val toks = Tables.documents(s, dir).filter(col("doc_id") < 200)
+      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
+    val a = toks.select(col("doc_id").as("id_a"), col("toks").as("ta"))
+      .repartition(s.sparkContext.defaultParallelism)
+    val b = toks.select(col("doc_id").as("id_b"), col("toks").as("tb"))
+    val pairs = a.join(b, col("id_a") < col("id_b") &&
+        try_divide(size(array_intersect(col("ta"), col("tb"))).cast("double"),
+          size(array_union(col("ta"), col("tb"))).cast("double")) >= 0.5)
+      .select("id_a", "id_b")
+    (toks, pairs)
+  }
+
   /** GOOG.csv fixture path, checkout-independent (ADVICE r16): prefer an
     * explicit repo root via SPARK_GRAFT_REPO, else extract the bundled
     * classpath copy to a temp file. The same resolved path is interpolated
@@ -1273,15 +1292,8 @@ object SparkEntry {
       // generator here is the SQL-expressible jaccard slice so the whole
       // chain (including the iterative CC) is hash-checked vs a recursive
       // CTE; production input would be minhashNearDuplicates pairs.
-      val t = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val toks = t.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
-      val a = toks.select(col("doc_id").as("id_a"), col("toks").as("ta"))
-      val b = toks.select(col("doc_id").as("id_b"), col("toks").as("tb"))
-      val pairs = a.join(b, col("id_a") < col("id_b"))
-        .filter(try_divide(size(array_intersect(col("ta"), col("tb"))).cast("double"),
-          size(array_union(col("ta"), col("tb"))).cast("double")) >= 0.5)
-        .select("id_a", "id_b")
-      graft.text.Dedup.dupClusters(t.select("doc_id"), pairs)
+      val (toks, pairs) = jaccardSlicePairs(s, dir)
+      graft.text.Dedup.dupClusters(toks.select("doc_id"), pairs)
     }),
     // ---------------- r18: cluster-level dedup decisions (the two steps a
     // production pipeline runs AFTER cc01's clustering): quality-aware
@@ -1290,14 +1302,7 @@ object SparkEntry {
     // iterative CC plus the election/split — is hash-checked against a
     // recursive-CTE oracle; production input would be LSH pairs. ----------
     "dd20_cluster_prune" -> ((s, dir) => {
-      val t = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val toks = t.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
-      val a = toks.select(col("doc_id").as("id_a"), col("toks").as("ta"))
-      val b = toks.select(col("doc_id").as("id_b"), col("toks").as("tb"))
-      val pairs = a.join(b, col("id_a") < col("id_b"))
-        .filter(try_divide(size(array_intersect(col("ta"), col("tb"))).cast("double"),
-          size(array_union(col("ta"), col("tb"))).cast("double")) >= 0.5)
-        .select("id_a", "id_b")
+      val (toks, pairs) = jaccardSlicePairs(s, dir)
       // quality = distinct-token count: an integer signal, so the argmax
       // is trivially cross-engine-exact; swap in qualityScore in production
       graft.text.Dedup.clusterRepresentatives(
@@ -1305,17 +1310,10 @@ object SparkEntry {
         size(col("toks")).cast("long"))
     }),
     "smp12_leakage_free_split" -> ((s, dir) => {
-      val t = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val toks = t.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
-      val a = toks.select(col("doc_id").as("id_a"), col("toks").as("ta"))
-      val b = toks.select(col("doc_id").as("id_b"), col("toks").as("tb"))
-      val pairs = a.join(b, col("id_a") < col("id_b"))
-        .filter(try_divide(size(array_intersect(col("ta"), col("tb"))).cast("double"),
-          size(array_union(col("ta"), col("tb"))).cast("double")) >= 0.5)
-        .select("id_a", "id_b")
+      val (toks, pairs) = jaccardSlicePairs(s, dir)
       // modulo splitter so DuckDB can replay the assignment; the certified
       // property (cluster-atomic splits) holds for any splitter
-      graft.text.Dedup.leakageFreeSplit(t.select("doc_id"), pairs, nSplits = 10,
+      graft.text.Dedup.leakageFreeSplit(toks.select("doc_id"), pairs, nSplits = 10,
         splitOf = Some(c => pmod(c, lit(10))))
     }),
     "smp13_sequence_packing" -> ((s, dir) =>

@@ -47,31 +47,6 @@ object Dedup {
     * [[WordShingles]] expression: one pass, no HOF interpretation. */
   def shingles(text: Column, k: Int): Column = WordShingles.ofColumn(text, k)
 
-  /** MinHash signature of a shingle array: numHashes permutation minima.
-    * Deterministic multiply-add-mask family (odd multipliers over a murmur
-    * base hash — modulo-free: the signature stage only needs a uniform hash
-    * family, exactness comes from the Jaccard verification stage), computed
-    * per-row in a UDF (per-doc local work, no shuffle). */
-  def minhashSignature(shingleCol: Column, numHashes: Int, seed: Int = 42): Column = {
-    val rng = new java.util.Random(seed)
-    val as = Array.fill(numHashes)(rng.nextLong() | 1L) // odd multipliers
-    val bs = Array.fill(numHashes)(rng.nextLong())
-    val f = udf { (sh: Seq[String]) =>
-      val sig = Array.fill(numHashes)(Long.MaxValue)
-      sh.foreach { s =>
-        val base = (MurmurHash3.stringHash(s).toLong & 0xffffffffL)
-        var i = 0
-        while (i < numHashes) {
-          val h = (as(i) * base + bs(i)) & Long.MaxValue
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-      }
-      sig
-    }
-    f(shingleCol)
-  }
-
   /**
    * MinHash signature straight from the text: shingle hashes are combined
    * from per-token murmur hashes, so no shingle strings are ever
@@ -102,31 +77,33 @@ object Dedup {
   def minhashNearDuplicates(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    // signatures come straight from token hashes (no shingle strings) over
-    // the whole corpus; real shingle arrays are only materialized for the
-    // candidate docs during exact-Jaccard verification.
-    val base = spread(df).select(col(idCol).as("id"), col(textCol).as("__text"))
-    val withSig = base.withColumn("sig",
-      minhashSignatureFromText(col("__text"), k, numHashes))
-    val cands = Lsh.minhashCandidates(withSig, "id", "sig", numHashes, bands)
+    // one per-document pass computes the signature and the sorted 64-bit
+    // shingle hashes (the minhashIndex projection) BEFORE the semi-join to
+    // the candidate ids, so the hashes cost one evaluation per document
+    // whichever side AQE broadcasts. Projected after the semi-join, codegen
+    // fused them into the verify join's probe loop, which re-hashed a
+    // document once per candidate pair when the candidates were broadcast.
+    // No broadcast hint: the candidate-id set is bounded only by the corpus'
+    // near-dup rate (30-50% on web crawls), so forcing a broadcast is a
+    // driver OOM at 100 TB; AQE broadcasts iff it fits. Verifying on sorted
+    // hashes, not shingle strings, cuts the verify join's payload ~8x and
+    // makes the Jaccard a linear merge (r17; 100x numbers in SCALE.md);
+    // values are identical modulo 64-bit collisions (~1e-14 per doc).
+    val idx = minhashIndex(df, textCol, idCol, k, numHashes)
+    val cands = Lsh.minhashCandidates(idx, "id", "sig", numHashes, bands)
     val candIds = cands.select(col("id_a").as("id"))
       .union(cands.select(col("id_b").as("id"))).distinct()
-    // no broadcast hint: the candidate-id set is bounded only by the corpus'
-    // near-dup rate (30-50% on web crawls), so forcing a broadcast is a
-    // driver-OOM at 100 TB. Left-semi on id — AQE picks broadcast iff it fits.
-    // Verification runs on SORTED 64-bit shingle hashes, not shingle
-    // strings: in a dup-dense corpus the verify join's shuffle payload
-    // (two full shingle arrays per candidate pair) dominates, and hashes
-    // cut it ~8x while the Jaccard becomes a linear merge (r17; measured
-    // 100x numbers in SCALE.md). Values are identical modulo 64-bit
-    // collisions (~1e-14 per doc).
-    val candSh = base.join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), HashedWordShingles.ofColumn(col("__text"), k).as("sh"))
+    val candSh = idx.select("id", "sh").join(candIds, Seq("id"), "left_semi")
+    // an empty side has Jaccard 0 (null when both are), which a positive
+    // threshold rejects anyway; an explicit size test would be pushed into
+    // the scan and hash every document's shingles a second time there
+    val nonEmpty = if (threshold > 0) lit(true)
+      else size(col("sh_a")) > 0 && size(col("sh_b")) > 0
     cands
       .join(candSh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(candSh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       .withColumn("jaccard", JaccardSortedLongs.ofColumns(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold && size(col("sh_a")) > 0 && size(col("sh_b")) > 0)
+      .filter(col("jaccard") >= threshold && nonEmpty)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
@@ -318,7 +295,7 @@ object Dedup {
    * and `keep` — exactly one true per cluster, singletons always kept.
    *
    * Shape: one CC run over the pairs (see [[graft.graph.ConnectedComponents]]
-   * — O(log diameter) rounds of keyed shuffles) plus ONE extra shuffle on
+   * — a few rounds of one aggregate and one join each) plus ONE extra shuffle on
    * cluster_id for the per-cluster argmax window. Nothing widens with
    * cluster size except the window partition, which is the same per-key
    * work a groupBy(cluster) would do.
