@@ -197,7 +197,7 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
     val m = BDM.zeros[Double](k, k)
     for (j <- 0 until k) m(0, j) = coefs(j)
     for (i <- 1 until k) m(i, i - 1) = 1.0
-    val ev = eig(m)
+    val ev = LapackLock.synchronized(eig(m))
     var mx = 0.0
     for (i <- 0 until k) {
       val mod = math.hypot(ev.eigenvalues(i), ev.eigenvaluesComplex(i))
@@ -211,6 +211,14 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
   /** MA polynomial invertibility via the same companion-matrix criterion. */
   def isInvertible: Boolean = maxCompanionEigenvalue(maCoefs) < 1.0
 }
+
+/** One LAPACK call at a time per JVM. The pure-Java (F2j) LAPACK keeps
+  * Fortran SAVE state (`dlamch`'s machine constants, `dlartg`'s scaling
+  * bounds) in static fields that its first call fills without
+  * synchronization: a concurrent first call reads zeros, and `dgeev`'s
+  * `dlascl` then loops forever. Per-key fits run in parallel tasks; a k×k
+  * companion solve is microseconds against a fit's milliseconds. */
+private[graft] object LapackLock
 
 object ARIMA {
 

@@ -4,7 +4,7 @@ import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.{array, col}
 
 /**
@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions.{array, col}
  *  - gather: rows with a null in any value column are dropped (a missing
  *    point cannot enter a fit); the key is cast to string, ts to long and
  *    every value to double; one hash shuffle on the key, nothing else.
+ *  - fan-out: that shuffle has a fixed `spark.sql.shuffle.partitions`
+ *    partitions (`Tables.configure` sets it to the core count), each one
+ *    task. A fit costs CPU per key, not per byte, and a few hundred series
+ *    gather into well under AQE's minimum partition size, so byte-sized
+ *    coalescing would merge them into one task and run every fit on one
+ *    core. A `repartition(n, key)` shuffle is one AQE never coalesces, and
+ *    it already clusters the grouping on `key`, so no second exchange.
  *  - order: each key's rows ascend by ts; rows with equal ts are ordered by
  *    their values (first value column first, `java.lang.Double.compare`),
  *    so a key's result does not depend on shuffle arrival order.
@@ -30,8 +37,8 @@ private[graft] object PerSeries {
   def apply[U <: Product : TypeTag](df: DataFrame, key: String, ts: String,
       value: String)(kernel: (String, Array[Long], Array[Double]) => IterableOnce[U])
       : Dataset[U] =
-    lift(gather(df, key, ts, Seq(value), col(value).cast("double").as("value"))
-      .as(Encoders.product[KeyedPoint]), (r: KeyedPoint) => r.key, pointOrder) { (k, pts) =>
+    lift(gather(df, key, ts, Seq(value), col(value).cast("double").as("value")),
+      Encoders.product[KeyedPoint], pointOrder) { (k, pts) =>
       kernel(k, pts.map(_.ts), pts.map(_.value))
     }
 
@@ -42,9 +49,8 @@ private[graft] object PerSeries {
       (kernel: (String, Array[Long], Array[Array[Double]]) => IterableOnce[U])
       : Dataset[U] =
     lift(gather(df, key, ts, valueCols,
-      array(valueCols.map(c => col(c).cast("double")): _*).as("values"))
-      .as(Encoders.product[(String, Long, Array[Double])]),
-      (r: (String, Long, Array[Double])) => r._1, rowOrder) { (k, pts) =>
+      array(valueCols.map(c => col(c).cast("double")): _*).as("values")),
+      Encoders.product[(String, Long, Array[Double])], rowOrder) { (k, pts) =>
       kernel(k, pts.map(_._2), pts.map(_._3))
     }
 
@@ -69,15 +75,20 @@ private[graft] object PerSeries {
     df.filter(valueCols.map(c => col(c).isNotNull).reduce(_ && _))
       .select(col(key).cast("string").as("key"), col(ts).cast("long").as("ts"), values)
 
-  /** The one shuffle: group on the key, sort each key's rows, hand over. */
-  private def lift[T <: AnyRef : ClassTag, U <: Product : TypeTag](rows: Dataset[T],
-      keyOf: T => String, order: Ordering[T])(handOver: (String, Array[T]) => IterableOnce[U])
-      : Dataset[U] =
-    rows.groupByKey(keyOf)(Encoders.STRING).flatMapGroups { (k, it) =>
-      val pts = it.toArray
-      java.util.Arrays.sort(pts, order)
-      handOver(k, pts)
-    }(Encoders.product[U])
+  /** The one shuffle: hash the gathered rows on `key` into the session's
+    * shuffle partition count, group on the key, sort each key's rows, hand
+    * over. `enc` binds `(key, ts, value[s])` (a tuple by ordinal). */
+  private def lift[T <: AnyRef : ClassTag, U <: Product : TypeTag](rows: DataFrame,
+      enc: Encoder[T], order: Ordering[T])(handOver: (String, Array[T]) => IterableOnce[U])
+      : Dataset[U] = {
+    val n = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.repartition(n, col("key")).groupBy(col("key")).as[String, T](Encoders.STRING, enc)
+      .flatMapGroups { (k, it) =>
+        val pts = it.toArray
+        java.util.Arrays.sort(pts, order)
+        handOver(k, pts)
+      }(Encoders.product[U])
+  }
 
   private val pointOrder: Ordering[KeyedPoint] = (a, b) => {
     val c = java.lang.Long.compare(a.ts, b.ts)

@@ -18,8 +18,8 @@ import graft.plans.{KernelInput, UnaryKernel}
  * holds the trained model (centroids / codebooks / LUTs) via the SAME jvm
  * Broadcast the UDF closures captured, so task closures stay small at any
  * model size; the arithmetic replicates the UDFs bit-exactly (fold order,
- * strict-< argmin ties to the lowest index, stable (distance, index)
- * ordering for top-n).
+ * stable (distance, index) ordering under `java.lang.Double.compare` for the
+ * argmin and the top-n, so ties go to the lowest index and NaN sorts last).
  *
  * Inputs are the engine's normalized ARRAY<DOUBLE> vectors (what every
  * caller passes); NULL input rows yield NULL (the UDF path never saw one —
@@ -28,11 +28,13 @@ import graft.plans.{KernelInput, UnaryKernel}
  */
 object Quantizers {
 
-  /** argmin over centers of squared L2 distance; strict < ⇒ lowest index
-    * wins ties (bit-identical to the ivf assignCell fold). */
+  /** argmin over centers of squared L2 distance under
+    * `java.lang.Double.compare`, strict ⇒ lowest index wins ties: the head
+    * of the UDF's stable sort on distance (NaN after +Inf), as
+    * [[nearestCells]]. No centers ⇒ 0. */
   def nearestCell(v: ArrayData, cs: Array[Array[Double]]): Int = {
     var best = 0
-    var bestD = Double.MaxValue
+    var bestD = Double.NaN // last under Double.compare: any distance ties or beats it
     var j = 0
     while (j < cs.length) {
       val ctr = cs(j)
@@ -40,7 +42,7 @@ object Quantizers {
       var i = 0
       val n = v.numElements()
       while (i < n) { val t = v.getDouble(i) - ctr(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = j }
+      if (java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = j }
       j += 1
     }
     best
@@ -82,8 +84,9 @@ object Quantizers {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** PQ encode: per sub-block, the nearest sub-centroid's code (strict <,
-    * lowest code wins ties — bit-identical to the encode UDF). */
+  /** PQ encode: per sub-block, the nearest sub-centroid's code under
+    * `java.lang.Double.compare` (strict, lowest code wins ties; NaN after
+    * +Inf, as [[nearestCell]]). */
   def pqEncode(v: ArrayData, cbs: Array[Array[Array[Double]]], sub: Int): ArrayData = {
     val m = cbs.length
     val out = new Array[Int](m)
@@ -91,7 +94,7 @@ object Quantizers {
     while (b < m) {
       val cb = cbs(b)
       var best = 0
-      var bestD = Double.MaxValue
+      var bestD = Double.NaN
       var j = 0
       while (j < cb.length) {
         var d = 0.0
@@ -99,7 +102,7 @@ object Quantizers {
         while (i < sub) {
           val t = v.getDouble(b * sub + i) - cb(j)(i); d += t * t; i += 1
         }
-        if (d < bestD) { bestD = d; best = j }
+        if (java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = j }
         j += 1
       }
       out(b) = best

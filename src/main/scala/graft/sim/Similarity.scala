@@ -297,8 +297,8 @@ object Similarity {
     // r22: the corpus cell assignment and the query probes run through the
     // native codegen'd NearestCentroid/NearestCentroids expressions — the
     // scalar UDFs boxed every vector into a Seq[Double] per row (and left
-    // opaque UDF nodes in the plan). Same strict-< argmin / stable
-    // (distance, index) top-nprobe semantics, bit-identical cells.
+    // opaque UDF nodes in the plan). Same stable (distance, index) order
+    // for the argmin and the top-nprobe, bit-identical cells.
     val assigned = c.withColumn("cell",
         NearestCentroid.ofColumn(col("nv"), bcCentroids))
       .select("neighbor_id", "nv", "nn", "cell")
@@ -368,8 +368,8 @@ object Similarity {
     // r22: encode / LUT / ADC-score run through the native codegen'd
     // PqEncode / PqLut / PqScores expressions — the scalar UDFs boxed every
     // vector (Seq[Double]) and code array (Seq[Int]) per corpus row. Same
-    // strict-< sub-argmin ties, same fold order: codes, LUTs and scores are
-    // bit-identical.
+    // lowest-code sub-argmin ties, same fold order: codes, LUTs and scores
+    // are bit-identical.
     val coded = c.withColumn("codes", PqEncode.ofColumn(col("nv"), bc, sub))
     val q = queries.select(col(idCol).as("query_id"), normalized(col(vecCol)).as("qv"))
     val qLut = q.withColumn("lut", PqLut.ofColumn(col("qv"), bc, sub, codebookSize))

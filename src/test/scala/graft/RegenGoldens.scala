@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: refresh the frozen sf0.01 golden CSVs (GoldenSpec format —
   * %.6f doubles, sorted lines) after an intentional change to a seeded
-  * ANN/LSH kernel. Usage: runMain graft.RegenGoldens sm03_knn_ivf ...
+  * ANN/LSH kernel. Usage: Test/runMain graft.RegenGoldens sm03_knn_ivf ...
   * Each name must have a column list registered below. */
 object RegenGoldens {
   private val cols: Map[String, Seq[String]] = Map(

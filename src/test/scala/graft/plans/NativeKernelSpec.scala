@@ -193,6 +193,30 @@ class NativeKernelSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("quantizer kernels order a NaN distance after a later +Inf one") {
+    // center / sub-centroid 0 holds +Inf: (+Inf, 0) is NaN from it, +Inf from 1
+    val infFirst = Array(Array(Double.PositiveInfinity, 0.0), Array(0.0, 1.0))
+    val cs = spark.sparkContext.broadcast(infFirst)
+    val cbs = spark.sparkContext.broadcast(Array(infFirst, infFirst))
+    val vecSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("v", ArrayType(DoubleType, containsNull = true)),
+      StructField("v4", ArrayType(DoubleType, containsNull = true))))
+    val inf = Double.PositiveInfinity
+    val vecRows = Seq(Row(0L, Seq(inf, 0.0), Seq(inf, 0.0, inf, 0.0)))
+    for ((s, codegen) <- Seq(interpreted -> false, compiled -> true)) {
+      val df = s.createDataFrame(s.sparkContext.parallelize(vecRows, 1), vecSchema)
+        .select(NearestCentroid.ofColumn(col("v"), cs),
+          NearestCentroids.ofColumn(col("v"), cs, 2),
+          PqEncode.ofColumn(col("v4"), cbs, 2))
+      val plan = df.queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen, plan.toString)
+      val r = df.head()
+      assert(r.getInt(0) == 1, s"codegen=$codegen nearest_centroid")
+      assert(r.getSeq[Int](1) == Seq(1, 0), s"codegen=$codegen nearest_centroids")
+      assert(r.getSeq[Int](2) == Seq(1, 1), s"codegen=$codegen pq_encode")
+    }
+  }
+
   test("the harness covers every native kernel") {
     val classes = kernels.map(k => GraftSqlBridge.expression(k()).getClass).toSet
     assert(classes.forall(classOf[NativeKernel].isAssignableFrom))

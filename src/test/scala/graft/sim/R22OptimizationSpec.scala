@@ -133,20 +133,24 @@ class R22OptimizationSpec extends AnyFunSuite {
     ds.zipWithIndex.sortBy(_._1).take(nprobe).map(_._2).toSeq
   }
 
+  /** Center 0 holds +Inf: (+Inf, 0) is NaN from it and +Inf from the rest. */
+  private val infFirst: Array[Array[Double]] = Array(
+    Array(Double.PositiveInfinity, 0.0), Array(0.0, 1.0), Array(1.0, 0.0))
+
   test("NearestCentroid / NearestCentroids match the UDF's stable tie order") {
-    val bc = spark.sparkContext.broadcast(centers)
     val vecs = Seq(1L -> Array(0.9, 0.1), 2L -> Array(0.0, 0.0),
       3L -> Array(-0.5, -0.5), 4L -> Array(0.5, 0.5),
       5L -> Array(Double.NaN, 0.0), // every distance NaN
-      6L -> Array(1e200, 1e200))    // every distance overflows to +Inf
+      6L -> Array(1e200, 1e200),    // every distance overflows to +Inf
+      7L -> Array(Double.PositiveInfinity, 0.0)) // NaN before +Inf on infFirst
     val df = vecDf(vecs)
-    for (np <- 1 to 4) {
+    for (cs <- Seq(centers, infFirst); bc = spark.sparkContext.broadcast(cs); np <- 1 to 4) {
       val got = df.select(col("id"),
           NearestCentroids.ofColumn(col("v"), bc, np),
           NearestCentroid.ofColumn(col("v"), bc))
         .orderBy("id").collect()
       got.zip(vecs.sortBy(_._1)).foreach { case (r, (eid, v)) =>
-        val exp = udfNearest(v.toSeq, centers, np)
+        val exp = udfNearest(v.toSeq, cs, np)
         assert(r.getSeq[Int](1) == exp, s"id=$eid nprobe=$np")
         assert(r.getInt(2) == exp.head, s"id=$eid scalar")
       }
