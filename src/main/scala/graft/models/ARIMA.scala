@@ -1,10 +1,6 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.{MultivariateFunction, MultivariateVectorFunction}
-import org.apache.commons.math3.optim.nonlinear.scalar.gradient.NonLinearConjugateGradientOptimizer
-import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
-import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction, ObjectiveFunctionGradient}
-import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds, SimpleValueChecker}
+import org.apache.commons.math3.analysis.MultivariateFunction
 import org.apache.commons.math3.random.RandomGenerator
 import org.apache.commons.math3.stat.regression.OLSMultipleLinearRegression
 
@@ -20,8 +16,8 @@ import scala.util.control.NonFatal
  * standard CSS (conditional sum of squares) formulation: errors are
  * conditioned to zero for t < p, the likelihood is Gaussian over the n-p
  * conditioned residuals, initial parameters come from Hannan-Rissanen, and
- * the optimum is found with bounded BOBYQA (or conjugate gradient with a
- * finite-difference gradient via method="css-cgd").
+ * the optimum is found by Nelder-Mead inside a penalty box (Brent for a
+ * single parameter), through [[Fit]].
  *
  * coefficients layout: [intercept (if hasIntercept)] ++ ar(1..p) ++ ma(1..q).
  */
@@ -263,63 +259,26 @@ object ARIMA {
   }
 
   /**
-   * Fit ARIMA(p,d,q) by maximizing the CSS likelihood.
-   * method: "css-nm" (default — Nelder-Mead with penalty bounds; strictly
+   * Fit ARIMA(p,d,q) by maximizing the CSS likelihood: a Brent search for a
+   * single parameter, otherwise Nelder-Mead inside a penalty box (strictly
    * bounded work per fit, which matters when thousands of fits run inside
-   * one Spark stage), "css-bobyqa" (commons-math BOBYQA; can spin in trsbox
-   * on rare series), or "css-cgd" (conjugate gradient, finite-difference
-   * gradient).
+   * one Spark stage). A Nelder-Mead fit that fails or runs out of
+   * evaluations keeps the Hannan-Rissanen estimate.
    */
   def fitModel(p: Int, d: Int, q: Int, ts: Array[Double],
-      includeIntercept: Boolean = true,
-      method: String = "css-nm"): ARIMAModel = {
+      includeIntercept: Boolean = true): ARIMAModel = {
     val z = ArrayOps.diffOfOrder(ts, d).drop(d)
     val nParams = (if (includeIntercept) 1 else 0) + p + q
     if (nParams == 0) return ARIMAModel(p, d, q, Array.empty, includeIntercept)
     val init = hannanRissanenInit(z, p, q, includeIntercept)
-
-    def negLL(params: Array[Double]): Double = {
-      val ll = ARIMAModel(p, d, q, params, includeIntercept).logLikelihoodCSS(z)
-      if (ll.isNaN || ll.isInfinite) 1e12 else -ll
-    }
+    val negLL: MultivariateFunction =
+      params => -ARIMAModel(p, d, q, params, includeIntercept).logLikelihoodCSS(z)
 
     val fitted: Array[Double] =
       if (nParams == 1) {
-        // 1-D: golden-section style Brent search around the init
-        import org.apache.commons.math3.analysis.UnivariateFunction
-        import org.apache.commons.math3.optim.univariate.{BrentOptimizer, SearchInterval, UnivariateObjectiveFunction}
-        val opt = new BrentOptimizer(1e-9, 1e-11)
-        val lo = init(0) - math.max(5.0, math.abs(init(0)) * 3)
-        val hi = init(0) + math.max(5.0, math.abs(init(0)) * 3)
-        val res = opt.optimize(new UnivariateObjectiveFunction(new UnivariateFunction {
-          override def value(a: Double): Double = negLL(Array(a))
-        }), GoalType.MINIMIZE, new SearchInterval(lo, hi),
-          new MaxEval(2000))
-        Array(res.getPoint)
-      } else if (method == "css-cgd") {
-        val grad = new MultivariateVectorFunction {
-          override def value(params: Array[Double]): Array[Double] = {
-            val g = new Array[Double](params.length)
-            val f0 = negLL(params)
-            var i = 0
-            while (i < params.length) {
-              val h = 1e-6 * math.max(1.0, math.abs(params(i)))
-              val up = params.clone(); up(i) += h
-              g(i) = (negLL(up) - f0) / h
-              i += 1
-            }
-            g
-          }
-        }
-        val opt = new NonLinearConjugateGradientOptimizer(
-          NonLinearConjugateGradientOptimizer.Formula.FLETCHER_REEVES,
-          new SimpleValueChecker(1e-8, 1e-8))
-        try {
-          opt.optimize(new ObjectiveFunction(new MultivariateFunction {
-            override def value(params: Array[Double]): Double = negLL(params)
-          }), new ObjectiveFunctionGradient(grad), GoalType.MINIMIZE,
-            new InitialGuess(init), new MaxEval(20000), new MaxIter(20000)).getPoint
-        } catch { case NonFatal(_) => init }
+        val f = Fit.penalized(1e12)(negLL)
+        val span = math.max(5.0, math.abs(init(0)) * 3)
+        Fit.brent(a => f.value(Array(a)), init(0) - span, init(0) + span, 1e-9, 1e-11, 2000).point
       } else {
         val lower = new Array[Double](nParams)
         val upper = new Array[Double](nParams)
@@ -338,36 +297,11 @@ object ARIMA {
           start(i) = math.min(math.max(start(i), lower(i) + 1e-6), upper(i) - 1e-6)
           i += 1
         }
-        if (method == "css-bobyqa") {
-          val opt = new BOBYQAOptimizer(2 * nParams + 1)
-          try {
-            opt.optimize(new ObjectiveFunction(new MultivariateFunction {
-              override def value(params: Array[Double]): Double = negLL(params)
-            }), GoalType.MINIMIZE, new InitialGuess(start),
-              new SimpleBounds(lower, upper), new MaxEval(30000), new MaxIter(30000))
-              .getPoint
-          } catch { case NonFatal(_) => init }
-        } else { // css-nm: Nelder-Mead with out-of-bounds penalty
-          import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.{NelderMeadSimplex, SimplexOptimizer}
-          def penalized(params: Array[Double]): Double = {
-            var i = 0
-            while (i < params.length) {
-              if (params(i) < lower(i) || params(i) > upper(i)) return 1e12
-              i += 1
-            }
-            negLL(params)
-          }
-          // rel 1e-7 converges well past the coefficient accuracy anyone
-          // reads off a CSS fit and halves the evaluation count vs 1e-10
-          val opt = new SimplexOptimizer(1e-7, 1e-9)
-          try {
-            opt.optimize(new ObjectiveFunction(new MultivariateFunction {
-              override def value(params: Array[Double]): Double = penalized(params)
-            }), GoalType.MINIMIZE, new InitialGuess(start),
-              new NelderMeadSimplex(nParams, 0.1), new MaxEval(20000),
-              new MaxIter(20000)).getPoint
-          } catch { case NonFatal(_) => init }
-        }
+        // rel 1e-7 converges well past the coefficient accuracy anyone
+        // reads off a CSS fit and halves the evaluation count vs 1e-10
+        val r = Fit.nelderMead(Fit.penalized(1e12, lower, upper)(negLL), start, 0.1,
+          1e-7, 1e-9, 20000)
+        if (r.status == Fit.Status.Converged) r.point else init
       }
     ARIMAModel(p, d, q, fitted, includeIntercept)
   }

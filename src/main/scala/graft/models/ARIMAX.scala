@@ -1,12 +1,5 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.MultivariateFunction
-import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
-import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
-import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
-
-import scala.util.control.NonFatal
-
 /**
  * ARIMAX(p,d,q; xLag): ARIMA with lagged exogenous regressors,
  *   z_t = c + Σ φ_i z_{t-i} + Σ θ_j e_{t-j} + Σ_k Σ_{l=0..xLag} β_{k,l} x_{k,t-l} + e_t
@@ -106,7 +99,8 @@ object ARIMAX {
   /**
    * Fit: ARX least squares for the AR+exogenous block, Hannan-Rissanen-style
    * residual regression for the MA block, then joint CSS refinement by
-   * bounded BOBYQA.
+   * bounded BOBYQA (kept here although the other per-series fits use
+   * Nelder-Mead: m12 and its frozen digest twin m50 pin its output).
    */
   def fitModel(p: Int, d: Int, q: Int, ts: Array[Double], x: Array[Array[Double]],
       xLag: Int, includeIntercept: Boolean = true): ARIMAXModel = {
@@ -131,19 +125,11 @@ object ARIMAX {
     if (nParams < 2) return ARIMAXModel(p, d, q, xLag, nXCols, init, includeIntercept)
 
     // stage 2: joint CSS refinement
-    val objective = new ObjectiveFunction(new MultivariateFunction {
-      override def value(pm: Array[Double]): Double = {
-        val v = ARIMAXModel(p, d, q, xLag, nXCols, pm, includeIntercept).css(z, xz)
-        if (v.isNaN || v.isInfinite) 1e18 else v
-      }
-    })
     val lower = init.map(v => v - math.max(5.0, math.abs(v) * 10))
     val upper = init.map(v => v + math.max(5.0, math.abs(v) * 10))
-    val opt = new BOBYQAOptimizer(2 * nParams + 1)
-    val fitted = try {
-      opt.optimize(objective, GoalType.MINIMIZE, new InitialGuess(init),
-        new SimpleBounds(lower, upper), new MaxEval(30000), new MaxIter(30000)).getPoint
-    } catch { case NonFatal(_) => init }
+    val fitted = Fit.bobyqa(Fit.penalized(1e18)(
+      pm => ARIMAXModel(p, d, q, xLag, nXCols, pm, includeIntercept).css(z, xz)),
+      init, lower, upper, 30000).point
     ARIMAXModel(p, d, q, xLag, nXCols, fitted, includeIntercept)
   }
 }

@@ -1,12 +1,6 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.MultivariateFunction
-import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.{NelderMeadSimplex, SimplexOptimizer}
-import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
-import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter}
 import org.apache.commons.math3.random.RandomGenerator
-
-import scala.util.control.NonFatal
 
 /**
  * EGARCH(1,1) — Nelson (1991) exponential GARCH:
@@ -114,21 +108,14 @@ object EGARCH {
     val lv = math.log(math.max(ArrayOps.variance(ts), 1e-12))
     def unpack(p: Array[Double]): EGARCHModel = EGARCHModel(
       p(0), 2.0 * math.tanh(p(1)), 2.0 * math.tanh(p(2)), 0.999 * math.tanh(p(3)))
-    def negLL(p: Array[Double]): Double = {
-      if (math.abs(p(0)) > math.abs(lv) + 16) return 1e12 // ω sanity only
-      val ll = unpack(p).logLikelihood(ts)
-      if (ll.isNaN || ll.isInfinite) 1e12 else -ll
-    }
+    // ω sanity box only; α, γ and β are free in the tanh parametrization
+    val wb = math.abs(lv) + 16
+    val inf = Double.PositiveInfinity
+    val negLL = Fit.penalized(1e12, Array(-wb, -inf, -inf, -inf), Array(wb, inf, inf, inf))(
+      pm => -unpack(pm).logLikelihood(ts))
     def atanh(x: Double) = 0.5 * math.log((1 + x) / (1 - x))
-    val opt = new SimplexOptimizer(1e-8, 1e-9)
     val init = Array(lv * 0.1, atanh(0.1 / 2), atanh(-0.05 / 2), atanh(0.9 / 0.999))
-    val p = try {
-      opt.optimize(new ObjectiveFunction(new MultivariateFunction {
-        override def value(pm: Array[Double]): Double = negLL(pm)
-      }), GoalType.MINIMIZE, new InitialGuess(init),
-        new NelderMeadSimplex(4, 0.05), new MaxEval(4000), new MaxIter(4000))
-        .getPoint
-    } catch { case NonFatal(_) => init }
+    val p = Fit.nelderMead(negLL, init, 0.05, 1e-8, 1e-9, 4000).point
     unpack(p)
   }
 }

@@ -1,10 +1,5 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.UnivariateFunction
-import org.apache.commons.math3.optim.MaxEval
-import org.apache.commons.math3.optim.nonlinear.scalar.GoalType
-import org.apache.commons.math3.optim.univariate.{BrentOptimizer, SearchInterval, UnivariateObjectiveFunction}
-
 /**
  * Simple exponential smoothing s_0 = x_0; s_t = α·x_t + (1-α)·s_{t-1}
  * (the convention the reference's tests pin — models/EWMA.scala:135-143 /
@@ -62,13 +57,6 @@ case class EWMAModel(smoothing: Double) extends TimeSeriesModel {
 
 object EWMA {
   /** Fit the smoothing parameter by minimizing one-step-ahead SSE on (0,1). */
-  def fitModel(ts: Array[Double]): EWMAModel = {
-    val objective = new UnivariateObjectiveFunction(new UnivariateFunction {
-      override def value(a: Double): Double = EWMAModel(a).sse(ts)
-    })
-    val opt = new BrentOptimizer(1e-8, 1e-10)
-    val res = opt.optimize(objective, GoalType.MINIMIZE,
-      new SearchInterval(1e-6, 1 - 1e-6), new MaxEval(1000))
-    EWMAModel(res.getPoint)
-  }
+  def fitModel(ts: Array[Double]): EWMAModel =
+    EWMAModel(Fit.brent(a => EWMAModel(a).sse(ts), 1e-6, 1 - 1e-6, 1e-8, 1e-10, 1000).point(0))
 }

@@ -1,18 +1,12 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.MultivariateFunction
-import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
-import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
-import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
 import org.apache.commons.math3.random.RandomGenerator
-
-import scala.util.control.NonFatal
 
 /**
  * GARCH(1,1): ε_t = √h_t · z_t,  h_t = ω + α ε²_{t-1} + β h_{t-1}
  * (capability of reference models/GARCH.scala:26-260, re-implemented:
- * bounded BOBYQA on the exact log-likelihood with analytic gradient exposed
- * for diagnostics).
+ * Nelder-Mead inside a penalty box on the exact log-likelihood, with the
+ * analytic gradient exposed for diagnostics).
  */
 case class GARCHModel(omega: Double, alpha: Double, beta: Double) extends TimeSeriesModel
     with TimeSeriesFilter {
@@ -149,21 +143,9 @@ object GARCH {
     * why BOBYQA is avoided in per-series stages). */
   def fitModel(ts: Array[Double]): GARCHModel = {
     val v = ArrayOps.variance(ts)
-    def negLL(p: Array[Double]): Double = {
-      if (p(0) < 1e-10 || p(0) > v * 10 + 1e-6 ||
-        p(1) < 0.0 || p(1) > 0.999 || p(2) < 0.0 || p(2) > 0.999) return 1e12
-      val ll = GARCHModel(p(0), p(1), p(2)).logLikelihood(ts)
-      if (ll.isNaN || ll.isInfinite) 1e12 else -ll
-    }
-    import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.{NelderMeadSimplex, SimplexOptimizer}
-    val opt = new SimplexOptimizer(1e-10, 1e-12)
-    val p = try {
-      opt.optimize(new ObjectiveFunction(new MultivariateFunction {
-        override def value(pm: Array[Double]): Double = negLL(pm)
-      }), GoalType.MINIMIZE, new InitialGuess(Array(v * 0.2, 0.2, 0.5)),
-        new NelderMeadSimplex(3, 0.05), new MaxEval(10000), new MaxIter(10000))
-        .getPoint
-    } catch { case NonFatal(_) => Array(v * 0.2, 0.2, 0.5) }
+    val negLL = Fit.penalized(1e12, Array(1e-10, 0.0, 0.0), Array(v * 10 + 1e-6, 0.999, 0.999))(
+      pm => -GARCHModel(pm(0), pm(1), pm(2)).logLikelihood(ts))
+    val p = Fit.nelderMead(negLL, Array(v * 0.2, 0.2, 0.5), 0.05, 1e-10, 1e-12, 10000).point
     GARCHModel(p(0), p(1), p(2))
   }
 }

@@ -1,12 +1,5 @@
 package graft.models
 
-import org.apache.commons.math3.analysis.MultivariateFunction
-import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.BOBYQAOptimizer
-import org.apache.commons.math3.optim.nonlinear.scalar.{GoalType, ObjectiveFunction}
-import org.apache.commons.math3.optim.{InitialGuess, MaxEval, MaxIter, SimpleBounds}
-
-import scala.util.control.NonFatal
-
 /**
  * Triple exponential smoothing (Holt-Winters), additive and multiplicative,
  * compatible with R stats::HoltWinters (capability of reference
@@ -258,8 +251,8 @@ object HoltWinters {
    * evaluations on some series — a stuck optimizer must never hang a 1000-
    * executor job, so the fit uses strictly-bounded-work methods.)
    */
-  def fitModel(ts: Array[Double], period: Int, modelType: String = "additive",
-      method: String = "grid-nm"): HoltWintersModel = {
+  def fitModel(ts: Array[Double], period: Int,
+      modelType: String = "additive"): HoltWintersModel = {
     val additive = modelType.toLowerCase.startsWith("add")
     // the initial state depends only on (ts, period, additive) — compute it
     // ONCE instead of inside every one of the ~1.3k grid + Nelder-Mead SSE
@@ -269,30 +262,19 @@ object HoltWinters {
     require(ts.length >= 2 * period,
       s"need at least 2 periods ($period) of data, got ${ts.length}")
     val (l0, b0, s0) = initialState(ts, period, additive)
-    def sseOf(a: Double, b: Double, g: Double): Double = {
-      if (a < 1e-8 || a > 1.0 || b < 0.0 || b > 1.0 || g < 0.0 || g > 1.0) return 1e18
-      val s = HoltWintersModel(period, a, b, g, additive).sseFrom(ts, l0, b0, s0)
-      if (s.isNaN || s.isInfinite) 1e18 else s
-    }
+    val sse = Fit.penalized(1e18, Array(1e-8, 0.0, 0.0), Array(1.0, 1.0, 1.0))(
+      pm => HoltWintersModel(period, pm(0), pm(1), pm(2), additive).sseFrom(ts, l0, b0, s0))
     // coarse grid: 0.1 steps (plus the boundary-hugging 0.999/0.001 corners)
     val gridPts = (0.02 +: (1 to 9).map(_ / 10.0) :+ 0.999)
-    var best = (0.3, 0.1, 0.1)
-    var bestSse = sseOf(0.3, 0.1, 0.1)
+    var best = Array(0.3, 0.1, 0.1)
+    var bestSse = sse.value(best)
     for (a <- gridPts; b <- gridPts; g <- gridPts) {
-      val s = sseOf(a, b, g)
-      if (s < bestSse) { bestSse = s; best = (a, b, g) }
+      val pt = Array(a, b, g)
+      val s = sse.value(pt)
+      if (s < bestSse) { bestSse = s; best = pt }
     }
     // Nelder-Mead refinement (bounded work, penalty keeps it inside the cube)
-    import org.apache.commons.math3.optim.nonlinear.scalar.noderiv.{NelderMeadSimplex, SimplexOptimizer}
-    val objective = new ObjectiveFunction(new MultivariateFunction {
-      override def value(pm: Array[Double]): Double = sseOf(pm(0), pm(1), pm(2))
-    })
-    val opt = new SimplexOptimizer(1e-10, 1e-12)
-    val pm = try {
-      opt.optimize(objective, GoalType.MINIMIZE,
-        new InitialGuess(Array(best._1, best._2, best._3)),
-        new NelderMeadSimplex(3, 0.05), new MaxEval(5000), new MaxIter(5000)).getPoint
-    } catch { case NonFatal(_) => Array(best._1, best._2, best._3) }
+    val pm = Fit.nelderMead(sse, best, 0.05, 1e-10, 1e-12, 5000).point
     val clamp = (v: Double) => math.min(math.max(v, 1e-8), 1.0)
     HoltWintersModel(period, clamp(pm(0)), clamp(pm(1)), clamp(pm(2)), additive)
   }
