@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
  *      (inherently quadratic) OUTPUT of a dup cluster, not a shuffle
  *      pathology — the bound no engine can beat (see SCALE.md).
  *
- * Dev probe — run with SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1; results
- * are recorded in SCALE.md's "Planted skew" section.
+ * Dev probe in the test tree (like [[RegenGoldens]]) — run with
+ * SPARK_GRAFT_SF_DIR pointing at the sf0.1 tables and `sbt "Test/runMain
+ * graft.SkewProbe"`; results are recorded in SCALE.md's "Planted skew"
+ * section.
  *
  * ==Division of labor vs the test suite (r18, VERDICT r17 #8)==
  * This probe is DEV-ONLY and TIMING-ONLY. Every plan-shape assertion it

@@ -102,7 +102,8 @@ class ExtensionsAndSkewSpec extends AnyFunSuite with Matchers
 
   test("AQE skew-join split fires on a planted hot key (SkewProbe preconditions pinned)") {
     // SOURCE OF TRUTH for the skew-split plan shape (r18): graft.SkewProbe
-    // is dev/timing-only and defers to this spec on any disagreement.
+    // (a test-tree dev main, `Test/runMain graft.SkewProbe`) is
+    // dev/timing-only and defers to this spec on any disagreement.
     // In-suite pin of the r16 SkewProbe finding (SCALE.md "Planted skew"):
     // the AQE skew split is a silent no-op unless THREE preconditions hold,
     // each encoded below — (1) the skewed reduce partition must be made of

@@ -24,7 +24,7 @@ import graft.SparkTestSession
 class RankPlanSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private def collectAll[T](plan: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    // recurse through AQE wrappers the same way SkewProbe does
+    // recurse through AQE wrappers the same way graft.SkewProbe (test tree) does
     val here = if (pf.isDefinedAt(plan)) Seq(pf(plan)) else Seq.empty
     val kids = plan match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)

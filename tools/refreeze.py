@@ -10,9 +10,10 @@ committed manifest row — exit 0 on match, 1 on drift, writing NOTHING.
 PythonGateSpec runs it inside `sbt test`, so silent digest drift (or a
 refreeze tool that would rewrite an unchanged row differently) is red.
 
-A `*_digest` constant in SparkEntry.oracleSql may only change together with
-its row in src/test/resources/digest_manifest.json (DigestFreezeSpec enforces
-the byte-match). This tool produces that row the only honest way:
+A `*_digest` constant oracle, registered beside its twin in a
+src/main/scala/graft/driver family module, may only change together with its
+row in src/test/resources/digest_manifest.json (DigestFreezeSpec enforces the
+byte-match). This tool produces that row the only honest way:
 
   1. re-runs the twin AND every paired certification query at sf0.01
      through graft.Verify (fresh JVM, compiled classes);
@@ -23,10 +24,11 @@ the byte-match). This tool produces that row the only honest way:
   3. reads the new (digest, n_pairs) from the twin's own output parquet;
   4. rewrites the manifest row with the new constant, the cert compare
      lines as evidence, and today's date;
-  5. prints the exact oracle SQL line to paste into SparkEntry.oracleSql.
+  5. prints the family module that registers the twin and the exact
+     `.oracle(...)` to paste into that registration.
 
-Commit the manifest change and the SparkEntry change together; the diff of
-the manifest IS the re-freeze evidence, auditable from history.
+Commit the manifest change and the family-module change together; the diff
+of the manifest IS the re-freeze evidence, auditable from history.
 """
 import json
 import re
@@ -38,6 +40,15 @@ import tempfile
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 MANIFEST = REPO / "src/test/resources/digest_manifest.json"
+DRIVER = REPO / "src/main/scala/graft/driver"
+
+
+def registering_module(twin):
+    """The graft.driver family module whose `Query("<twin>", ...)` registers it."""
+    for f in sorted(DRIVER.glob("*.scala")):
+        if f'Query("{twin}",' in f.read_text():
+            return f.relative_to(REPO)
+    sys.exit(f"{twin} is registered in no module under {DRIVER.relative_to(REPO)}")
 
 
 def run_verify(sf_dir, out_dir, names):
@@ -134,9 +145,10 @@ def main():
         "note": f"re-frozen via tools/refreeze.py at {sf_dir}",
     }
     MANIFEST.write_text(json.dumps(manifest, indent=1))
-    print(f"manifest updated. Paste into SparkEntry.oracleSql:\n"
-          f'    "{twin}" ->\n'
-          f'      """SELECT \'{digest}\' AS digest, {int(n_pairs)}::BIGINT AS n_pairs""",')
+    print(f"manifest updated. Paste into the {twin} registration in "
+          f"{registering_module(twin)}:\n"
+          f'      .oracle(\n'
+          f'      """SELECT \'{digest}\' AS digest, {int(n_pairs)}::BIGINT AS n_pairs""")')
 
 
 if __name__ == "__main__":
