@@ -1,12 +1,56 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Test-table loaders (driver-generated parquet, see TESTDATA.md). */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `dir/name.parquet` (a file or a directory of files). Its first read
+    * infers the schema and remembers it; a later read passes it to
+    * `spark.read.schema`, so it runs no footer-reading job. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val byPath = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap))
+    val now = fingerprint(spark, path)
+    byPath.get(path) match {
+      case (`now`, known) => spark.read.schema(known).parquet(path)
+      case _ => // absent (null) or rewritten
+        val inferred = spark.read.parquet(path)
+        byPath.put(path, (now, inferred.schema))
+        inferred
+    }
+  }
+
+  /** What a parquet schema inference depends on besides the session: each
+    * file's name, length and modification time, and the session's parquet
+    * confs (`nanosAsLong` picks between the two `ts` branches of
+    * [[withTsUs]]). */
+  private final case class Fingerprint(files: Seq[(String, Long, Long)],
+      conf: Seq[(String, String)])
+
+  /** Inferred schemas by session (weakly: entries die with their session),
+    * then by path. A path holds one entry, replaced when its fingerprint
+    * changes. The schema is kept, not the frame: two reads in one query
+    * must not share attribute ids. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]]
+
+  private def fingerprint(s: SparkSession, path: String): Fingerprint = {
+    val p = new Path(path)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val listed = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toList.sorted
+    val conf = s.conf.getAll.toList.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    Fingerprint(listed, conf)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -65,7 +109,13 @@ object Tables {
 
   /** Session config every entry point needs (nanos parquet + stable shuffles). */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
+    // artifact isolation gives every cloned session (each streaming query
+    // runs on one) its own class loader in executor tasks; the codegen
+    // cache is keyed by class loader, so each replay would recompile the
+    // same generated classes. graft adds no artifacts. Read only when a
+    // session is created.
     val base = b.config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", cpus)

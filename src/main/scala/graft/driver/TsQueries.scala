@@ -16,7 +16,7 @@ import Shared.{obs, dayUsTick, dayIndex, dailyWithMarket}
 object TsQueries {
 
   /** Per-user daily mean in `(key STRING, day_us, value)` layout — the
-    * shared input of the converter round-trip queries (ts50+). */
+    * shared input of sp01 and the converter round-trip queries (ts50+). */
   private def dailyKeyed(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(col("user_id").cast("string").as("key"),
@@ -31,10 +31,13 @@ object TsQueries {
          FROM events GROUP BY 1, 2)"""
 
   /** GOOG.csv fixture path, checkout-independent (ADVICE r16): prefer an
-    * explicit repo root via SPARK_GRAFT_REPO, else extract the bundled
-    * classpath copy to a temp file. The same resolved path is interpolated
-    * into the ts53 oracle SQL, which DuckDB reads in a separate process
-    * after this JVM exits — so the extracted file is NOT delete-on-exit.
+    * explicit repo root via SPARK_GRAFT_REPO, else the bundled classpath
+    * copy, extracted to `<java.io.tmpdir>/graft_yahoo_<sha256 prefix>/`.
+    * The same resolved path is interpolated into the ts53 oracle SQL,
+    * which DuckDB reads in a separate process after this JVM exits — so
+    * the extracted file is kept, and named by its content: every JVM
+    * resolves the same path, writes it only when it is absent, and the
+    * oracle string is the same in every run.
     * Single source of truth (ADVICE r17): `src/main/resources/GOOG.csv` is
     * the ONLY copy — both the env branch and the classpath fallback
     * resolve to the same bytes by construction (the former r16 duplicate
@@ -44,15 +47,26 @@ object TsQueries {
       .map(_ + "/src/main/resources/GOOG.csv")
       .filter(p => new java.io.File(p).isFile)
     fromRepo.getOrElse {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
       val in = getClass.getClassLoader.getResourceAsStream("GOOG.csv")
       require(in != null, "GOOG.csv not on classpath")
+      val bytes = try in.readAllBytes() finally in.close()
+      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+        .take(8).map(b => f"${b & 0xff}%02x").mkString
       // keep the exact file NAME: readYahooCsv derives the series key
       // prefix from it (reference YahooParser keys are "GOOG_Open" etc.)
-      val f = java.nio.file.Files.createTempDirectory("graft_yahoo_")
-        .resolve("GOOG.csv")
-      try java.nio.file.Files.copy(in, f,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      finally in.close()
+      val dir = Files.createDirectories(
+        Paths.get(System.getProperty("java.io.tmpdir"), s"graft_yahoo_$sha"))
+      val f = dir.resolve("GOOG.csv")
+      if (!Files.isRegularFile(f)) {
+        // a concurrent JVM may be writing the same bytes: write a private
+        // temp file and move it into place atomically
+        val tmp = Files.createTempFile(dir, "GOOG", ".tmp")
+        try {
+          Files.write(tmp, bytes)
+          Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
+      }
       f.toString
     }
   }
@@ -107,10 +121,7 @@ object TsQueries {
     Query("sp01_spline_series", (s, dir) => {
       // series-layout pipeline: daily obs -> conform to index (NaN gaps) ->
       // spline fill kernel -> melt back to observations
-      val daily = Tables.events(s, dir)
-        .groupBy(col("user_id").cast("string").as("key"),
-          unix_micros(date_trunc("DAY", timestamp_micros(col("ts_us")))).as("day_us"))
-        .agg(avg("value").as("value"))
+      val daily = dailyKeyed(s, dir)
       val index = dayIndex(s, dir)
       val series = TS.toSeries(daily, index, key = "key", ts = "day_us", value = "value")
       val filled = TS.fillSpline(series)

@@ -13,8 +13,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkTestSession
 
 /** The replay lifecycle contract ([[Replay]]): conf isolation, cleanup on
-  * failure, no leftover views, and a two-phase restart from one
-  * checkpoint — each on a small in-test fixture. */
+  * failure, no leftover views, no recompiled code on a repeated replay,
+  * and a two-phase restart from one checkpoint — each on a small in-test
+  * fixture. */
 class ReplaySpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val Partitions = "spark.sql.shuffle.partitions"
@@ -112,6 +113,16 @@ class ReplaySpec extends AnyFunSuite with Matchers with SparkTestSession {
       out.count() shouldBe (if (mode == "append") 3 else 2)
     }
     spark.catalog.listTables().collect().map(_.name).toSet shouldBe before
+  }
+
+  test("a second identical replay compiles no generated code") {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def replay(): Long = Replay.run(spark, "graft_replayspec_codegen_", "update",
+      fixture("a", 0, 1, 5))(daily).count()
+    replay() shouldBe 3
+    val before = compiles.getCount
+    replay() shouldBe 3
+    compiles.getCount shouldBe before
   }
 
   test("phase 2 restarts from phase 1's checkpoint: late rows past the watermark drop, inside it merge") {
