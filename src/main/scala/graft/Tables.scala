@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -41,10 +41,15 @@ object Tables {
   private val schemas =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Fingerprint, StructType)]]
 
+  /** The files are listed with `getFileStatus` and `listStatus`, not
+    * `listFiles`: a `LocatedFileStatus` loads each file's permission, which
+    * Hadoop's local filesystem reads by forking `ls -ld` per file. */
   private def fingerprint(s: SparkSession, path: String): Fingerprint = {
     val p = new Path(path)
-    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
-    val listed = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+    val listed = files(fs.getFileStatus(p))
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toList.sorted
     val conf = s.conf.getAll.toList.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
@@ -120,6 +125,7 @@ object Tables {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(graft.io.LocalFiles.Confs) // a `file:` filesystem that forks no process
     // dev-probe override (unset in driver runs): scan-split sizing for the
     // scale-up fixtures — exchange-free plans parallelize by input split,
     // so a small-file local fixture needs split sizes scaled down the same

@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 /**
@@ -24,7 +24,10 @@ import org.apache.spark.sql.streaming.Trigger
  *    caller's operator, the caller's output mode, `Trigger.AvailableNow`.
  *  - state parallelism: derived from the fixture's bytes and applied on a
  *    child session that carries every modifiable SQL conf of the caller's
- *    session; the caller's session conf is never written.
+ *    session; the caller's session conf is never written. The streaming
+ *    listener buses that the child, and the clone each query runs on,
+ *    register on the SparkContext are removed in a `finally`: Spark never
+ *    removes one, and each would stay a listener of every later event.
  *  - sink: one `foreachBatch` that collects each batch on the driver
  *    (replace in complete mode, append otherwise). The result is a local
  *    frame of the caller's session: it outlives the scratch dir and
@@ -53,24 +56,29 @@ private[graft] object Replay {
     withScratchDir(prefix) { dir =>
       val src = s"$dir/src"
       val emitted = ArrayBuffer.empty[Row]
-      val schemas = phases.zipWithIndex.map { case (phase, i) =>
-        phase.write.mode(if (i == 0) "overwrite" else "append").parquet(src)
-        val out = op(stateSession(s, src).readStream.schema(phases.head.schema)
-          .parquet(src))
-        val q = out.writeStream.outputMode(outputMode)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val rows = batch.collect()
-            emitted.synchronized {
-              if (outputMode == "complete") emitted.clear()
-              emitted ++= rows
-            }: Unit
-          }
-          .option("checkpointLocation", s"$dir/checkpoint")
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-        out.schema
-      }
-      emitted.synchronized(s.createDataFrame(emitted.toSeq.asJava, schemas.last))
+      val sessions = ArrayBuffer.empty[SparkSession]
+      try {
+        val schemas = phases.zipWithIndex.map { case (phase, i) =>
+          phase.write.mode(if (i == 0) "overwrite" else "append").parquet(src)
+          val child = stateSession(s, src)
+          sessions += child
+          val out = op(child.readStream.schema(phases.head.schema).parquet(src))
+          val q = out.writeStream.outputMode(outputMode)
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val rows = batch.collect()
+              emitted.synchronized {
+                if (outputMode == "complete") emitted.clear()
+                emitted ++= rows
+              }: Unit
+            }
+            .option("checkpointLocation", s"$dir/checkpoint")
+            .trigger(Trigger.AvailableNow()).start()
+          sessions += GraftSqlBridge.streamSession(q)
+          try q.awaitTermination() finally q.stop()
+          out.schema
+        }
+        emitted.synchronized(s.createDataFrame(emitted.toSeq.asJava, schemas.last))
+      } finally sessions.foreach(GraftSqlBridge.removeStreamingListenerBus)
     }
 
   /** A child of `s` with every modifiable SQL conf of `s` and one state

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,9 +13,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkTestSession
 
 /** The replay lifecycle contract ([[Replay]]): conf isolation, cleanup on
-  * failure, no leftover views, no recompiled code on a repeated replay,
-  * and a two-phase restart from one checkpoint — each on a small in-test
-  * fixture. */
+  * failure, no leftover views or listeners, no recompiled code on a
+  * repeated replay, and a two-phase restart from one checkpoint — each on
+  * a small in-test fixture. */
 class ReplaySpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val Partitions = "spark.sql.shuffle.partitions"
@@ -123,6 +123,17 @@ class ReplaySpec extends AnyFunSuite with Matchers with SparkTestSession {
     val before = compiles.getCount
     replay() shouldBe 3
     compiles.getCount shouldBe before
+  }
+
+  test("replays leave no streaming listener bus on the SparkContext") {
+    // the query manager of each child session, and of the clone a stateful
+    // query runs on, registers one; Spark never removes it
+    def buses: Int = GraftSqlBridge.streamingListenerBuses(spark.sparkContext).size
+    val before = buses
+    for (_ <- 1 to 2)
+      Replay.run(spark, "graft_replayspec_bus_", "update", fixture("a", 0, 1),
+        fixture("a", 5))(daily).count() shouldBe 3
+    buses shouldBe before
   }
 
   test("phase 2 restarts from phase 1's checkpoint: late rows past the watermark drop, inside it merge") {
