@@ -4,8 +4,6 @@ import org.apache.commons.math3.analysis.MultivariateFunction
 import org.apache.commons.math3.random.RandomGenerator
 import org.apache.commons.math3.stat.regression.OLSMultipleLinearRegression
 
-import breeze.linalg.{DenseMatrix => BDM, eig}
-
 import scala.util.control.NonFatal
 
 /**
@@ -187,34 +185,30 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
     ArrayOps.inverseDiffOfOrder(z, d)
   }
 
-  private def maxCompanionEigenvalue(coefs: Array[Double]): Double = {
-    val k = coefs.length
-    if (k == 0) return 0.0
-    val m = BDM.zeros[Double](k, k)
-    for (j <- 0 until k) m(0, j) = coefs(j)
-    for (i <- 1 until k) m(i, i - 1) = 1.0
-    val ev = LapackLock.synchronized(eig(m))
-    var mx = 0.0
-    for (i <- 0 until k) {
-      val mod = math.hypot(ev.eigenvalues(i), ev.eigenvaluesComplex(i))
-      if (mod > mx) mx = mod
+  /** Schur–Cohn test by the Levinson–Durbin step-down: every root of
+    * 1 − Σ a_j z^j lies outside the unit circle iff every reflection
+    * coefficient κ = a_m(m), m = k … 1, has |κ| < 1. A ±Inf coefficient
+    * leaves an Inf or NaN κ on the way down, so the test is false. */
+  private def rootsOutsideUnitCircle(coefs: Array[Double]): Boolean = {
+    require(!coefs.exists(_.isNaN), "NaN polynomial coefficient")
+    var a = coefs
+    var m = a.length
+    while (m > 0) {
+      val kappa = a(m - 1)
+      if (!(math.abs(kappa) < 1.0)) return false
+      val s = 1.0 - kappa * kappa
+      val prev = a
+      a = Array.tabulate(m - 1)(i => (prev(i) + kappa * prev(m - 2 - i)) / s)
+      m -= 1
     }
-    mx
+    true
   }
 
-  /** AR polynomial roots outside the unit circle ⇔ companion spectral radius < 1. */
-  def isStationary: Boolean = maxCompanionEigenvalue(arCoefs) < 1.0
-  /** MA polynomial invertibility via the same companion-matrix criterion. */
-  def isInvertible: Boolean = maxCompanionEigenvalue(maCoefs) < 1.0
+  /** AR polynomial 1 − Σ φ_i z^i has all roots outside the unit circle. */
+  def isStationary: Boolean = rootsOutsideUnitCircle(arCoefs)
+  /** MA polynomial invertibility via the same root criterion. */
+  def isInvertible: Boolean = rootsOutsideUnitCircle(maCoefs)
 }
-
-/** One LAPACK call at a time per JVM. The pure-Java (F2j) LAPACK keeps
-  * Fortran SAVE state (`dlamch`'s machine constants, `dlartg`'s scaling
-  * bounds) in static fields that its first call fills without
-  * synchronization: a concurrent first call reads zeros, and `dgeev`'s
-  * `dlascl` then loops forever. Per-key fits run in parallel tasks; a k×k
-  * companion solve is microseconds against a fit's milliseconds. */
-private[graft] object LapackLock
 
 object ARIMA {
 

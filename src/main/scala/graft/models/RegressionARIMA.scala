@@ -65,11 +65,4 @@ object RegressionARIMA {
     }
     RegressionARIMAModel(beta, rho, iter)
   }
-
-  /** Dispatch in the reference's style (only Cochrane-Orcutt is defined there too). */
-  def fitModel(y: Array[Double], x: Array[Array[Double]], method: String): RegressionARIMAModel =
-    method.toLowerCase match {
-      case "cochrane-orcutt" | "cochraneorcutt" => fitCochraneOrcutt(y, x)
-      case other => throw new UnsupportedOperationException(s"method $other not supported")
-    }
 }

@@ -42,18 +42,27 @@ class EntrySpec extends AnyFunSuite with Matchers with SparkTestSession {
     SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet shouldBe rowsOnly
   }
 
-  test("only the driver surfaces Bench, Verify and Explain define a main in src/main") {
-    val root = new File("src/main")
+  /** The Scala and Java sources under src/main whose text matches `re`. */
+  private def mainSourcesMatching(re: scala.util.matching.Regex): Set[String] = {
     def files(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else Seq(f).filter(g => g.getName.endsWith(".scala") || g.getName.endsWith(".java"))
-    val all = files(root)
+    val all = files(new File("src/main"))
     all should not be empty
-    val main = """\bdef\s+main\s*\(|\bstatic\s+void\s+main\s*\(|\bextends\s+App\b""".r
-    val mains = all.filter { f =>
+    all.filter { f =>
       val src = Source.fromFile(f, "UTF-8")
-      try main.findFirstIn(src.mkString).isDefined finally src.close()
+      try re.findFirstIn(src.mkString).isDefined finally src.close()
     }.map(_.getName).toSet
-    mains shouldBe Set("Bench.scala", "Verify.scala", "Explain.scala")
+  }
+
+  test("only the driver surfaces Bench, Verify and Explain define a main in src/main") {
+    val main = """\bdef\s+main\s*\(|\bstatic\s+void\s+main\s*\(|\bextends\s+App\b""".r
+    mainSourcesMatching(main) shouldBe Set("Bench.scala", "Verify.scala", "Explain.scala")
+  }
+
+  // Per-key fits run in parallel tasks; breeze's pure-Java LAPACK fills its
+  // static state unsynchronized on first use and can then spin forever.
+  test("no src/main file uses breeze or names LapackLock") {
+    mainSourcesMatching("""\bbreeze\.|\bLapackLock\b""".r) shouldBe empty
   }
 }

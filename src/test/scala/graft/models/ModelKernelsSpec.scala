@@ -1,12 +1,17 @@
 package graft.models
 
+import scala.concurrent.{ExecutionContext, Future}
+
+import breeze.linalg.{DenseMatrix => BDM, eig}
 import org.apache.commons.math3.random.MersenneTwister
+import org.scalatest.concurrent.ScalaFutures
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import org.scalatest.time.{Seconds, Span}
 
 /** Golden-value and property tests for the Spark-free model kernels,
   * mirroring the reference's test strategy (SURVEY §5). */
-class ModelKernelsSpec extends AnyFunSuite with Matchers {
+class ModelKernelsSpec extends AnyFunSuite with Matchers with ScalaFutures {
 
   // ---------------------------------------------------------------- ArrayOps
 
@@ -177,6 +182,55 @@ class ModelKernelsSpec extends AnyFunSuite with Matchers {
     ARIMAModel(1, 0, 1, Array(0.0, 1.2, 0.3)).isStationary shouldBe false
     ARIMAModel(1, 0, 1, Array(0.0, 0.5, 0.3)).isInvertible shouldBe true
     ARIMAModel(1, 0, 1, Array(0.0, 0.5, 1.4)).isInvertible shouldBe false
+    // a NaN coefficient fails loudly (autoFit and skipOnFailure drop the key)
+    an[IllegalArgumentException] should be thrownBy
+      ARIMAModel(2, 0, 0, Array(0.0, Double.NaN, 0.1)).isStationary
+    // ±Inf is not stationary, and the answer comes back: LAPACK's dgeev
+    // spun forever on it
+    for (inf <- Seq(Double.PositiveInfinity, Double.NegativeInfinity))
+      Future(ARIMAModel(2, 0, 0, Array(0.0, inf, 0.1)).isStationary)(ExecutionContext.global)
+        .futureValue(timeout(Span(5, Seconds))) shouldBe false
+  }
+
+  /** The companion-matrix spectral radius through breeze's `eig`: the root
+    * test ARIMAModel made before its Schur–Cohn step-down, kept as the
+    * reference the step-down is compared with. */
+  private def maxCompanionEigenvalue(coefs: Array[Double]): Double = {
+    val k = coefs.length
+    if (k == 0) return 0.0
+    val m = BDM.zeros[Double](k, k)
+    for (j <- 0 until k) m(0, j) = coefs(j)
+    for (i <- 1 until k) m(i, i - 1) = 1.0
+    val ev = eig(m)
+    var mx = 0.0
+    for (i <- 0 until k) {
+      val mod = math.hypot(ev.eigenvalues(i), ev.eigenvaluesComplex(i))
+      if (mod > mx) mx = mod
+    }
+    mx
+  }
+
+  test("ARIMA root test agrees with the companion-matrix spectral radius") {
+    val rand = new MersenneTwister(15L)
+    var compared = 0
+    var stationary = 0
+    while (compared < 20000) {
+      val k = 1 + rand.nextInt(6)
+      val scale = if (rand.nextBoolean()) 1.0 else 2.5
+      val coefs = Array.fill(k)(scale * (2 * rand.nextDouble() - 1))
+      val radius = maxCompanionEigenvalue(coefs)
+      if (math.abs(radius - 1.0) >= 1e-9) {
+        val m = ARIMAModel(k, 0, 0, coefs, hasIntercept = false)
+        withClue(s"AR coefficients ${coefs.mkString(", ")}, spectral radius $radius: ") {
+          m.isStationary shouldBe radius < 1.0
+        }
+        if (radius < 1.0) stationary += 1
+        compared += 1
+      }
+    }
+    // both answers are well represented in the sample
+    stationary should be > 2000
+    stationary should be < 18000
   }
 
   test("ARIMA forecast extends the series plausibly") {
@@ -249,7 +303,7 @@ class ModelKernelsSpec extends AnyFunSuite with Matchers {
       y(t) = 3.0 + 2.5 * x(t)(0) + u
       t += 1
     }
-    val fit = RegressionARIMA.fitModel(y, x, "cochrane-orcutt")
+    val fit = RegressionARIMA.fitCochraneOrcutt(y, x)
     fit.beta(0) shouldBe 3.0 +- 0.2
     fit.beta(1) shouldBe 2.5 +- 0.1
     fit.rho shouldBe 0.6 +- 0.1
