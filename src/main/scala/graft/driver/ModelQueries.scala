@@ -1708,7 +1708,7 @@ object ModelQueries {
       """SELECT 'd8bce0cf1483dd049b7a26fdb2cea169' AS digest, 150::BIGINT AS n_pairs"""),
     Query("m49_autofit_digest", (s, dir) =>
       rowDigest(SparkEntry.queries("m10_arima_autofit")(s, dir))).oracle(
-      """SELECT '2906d0f93459c0ef989fd22a4f9632ac' AS digest, 20::BIGINT AS n_pairs"""),
+      """SELECT 'd0f0e4f7702ee36fbb804b8978cbf3a0' AS digest, 20::BIGINT AS n_pairs"""),
     Query("m50_arimax_digest", (s, dir) =>
       rowDigest(SparkEntry.queries("m12_arimax")(s, dir))).oracle(
       """SELECT '0494c16d045e78e08148a60c098269bd' AS digest, 150::BIGINT AS n_pairs"""),

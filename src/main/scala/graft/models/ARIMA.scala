@@ -206,8 +206,9 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
 
   /** AR polynomial 1 − Σ φ_i z^i has all roots outside the unit circle. */
   def isStationary: Boolean = rootsOutsideUnitCircle(arCoefs)
-  /** MA polynomial invertibility via the same root criterion. */
-  def isInvertible: Boolean = rootsOutsideUnitCircle(maCoefs)
+  /** MA polynomial 1 + Σ θ_j z^j (the sign `cssResiduals` uses) has all
+    * roots outside the unit circle. */
+  def isInvertible: Boolean = rootsOutsideUnitCircle(maCoefs.map(-_))
 }
 
 object ARIMA {

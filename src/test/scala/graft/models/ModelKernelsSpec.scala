@@ -182,6 +182,10 @@ class ModelKernelsSpec extends AnyFunSuite with Matchers with ScalaFutures {
     ARIMAModel(1, 0, 1, Array(0.0, 1.2, 0.3)).isStationary shouldBe false
     ARIMAModel(1, 0, 1, Array(0.0, 0.5, 0.3)).isInvertible shouldBe true
     ARIMAModel(1, 0, 1, Array(0.0, 0.5, 1.4)).isInvertible shouldBe false
+    // the MA polynomial is 1 + Σ θ_j z^j: θ = (1.2, 0.5) has roots of
+    // modulus √2, θ = (-1.2, -0.5) a root at 0.655
+    ARIMAModel(0, 0, 2, Array(0.0, 1.2, 0.5)).isInvertible shouldBe true
+    ARIMAModel(0, 0, 2, Array(0.0, -1.2, -0.5)).isInvertible shouldBe false
     // a NaN coefficient fails loudly (autoFit and skipOnFailure drop the key)
     an[IllegalArgumentException] should be thrownBy
       ARIMAModel(2, 0, 0, Array(0.0, Double.NaN, 0.1)).isStationary
