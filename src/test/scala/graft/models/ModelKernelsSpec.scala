@@ -189,8 +189,8 @@ class ModelKernelsSpec extends AnyFunSuite with Matchers with ScalaFutures {
     // a NaN coefficient fails loudly (autoFit and skipOnFailure drop the key)
     an[IllegalArgumentException] should be thrownBy
       ARIMAModel(2, 0, 0, Array(0.0, Double.NaN, 0.1)).isStationary
-    // ±Inf is not stationary, and the answer comes back: LAPACK's dgeev
-    // spun forever on it
+    // ±Inf is not stationary; the time limit catches a root solver that
+    // spins on it (LAPACK's dgeev does)
     for (inf <- Seq(Double.PositiveInfinity, Double.NegativeInfinity))
       Future(ARIMAModel(2, 0, 0, Array(0.0, inf, 0.1)).isStationary)(ExecutionContext.global)
         .futureValue(timeout(Span(5, Seconds))) shouldBe false
