@@ -74,8 +74,9 @@ class FitSpec extends AnyFunSuite with Matchers {
   }
 
   // ------------------------------------------------- bit-identity pins
-  // Fitted parameters as hex doubles, recorded before the fits moved onto
-  // the seam. A change here is a change of every m* output that fits.
+  // Fitted parameters and forecasts as hex doubles, each recorded before a
+  // refactor of the code it runs through (the fitting seam; the ARMA
+  // recursion). A change here is a change of every m* output that fits.
 
   private def gauss(n: Int, seed: Long): Array[Double] = {
     val r = new MersenneTwister(seed)
@@ -100,6 +101,18 @@ class FitSpec extends AnyFunSuite with Matchers {
     val shocks = gauss(500, 18L)
     val ses = shocks.scanLeft(10.0)(_ + 0.4 * _).init.zip(shocks).map { case (l, s) => l + s }
     def hw(m: HoltWintersModel) = Array(m.alpha, m.beta, m.gamma)
+    val arima212 = ARIMAModel(2, 1, 2, Array(0.3, 0.4, 0.25, 0.35, 0.2))
+      .sample(300, new MersenneTwister(19L))
+    val ma1 = ARIMAModel(0, 0, 1, Array(0.6), hasIntercept = false)
+      .sample(300, new MersenneTwister(20L))
+    val xm = gauss(401, 21L)
+    val em = gauss(401, 22L)
+    val ym = new Array[Double](401)
+    for (t <- 0 until 401)
+      ym(t) = 4.0 + 0.4 * (if (t > 0) ym(t - 1) else 0.0) + 0.5 * (if (t > 0) em(t - 1) else 0.0) +
+        1.5 * xm(t) + 0.8 * (if (t > 0) xm(t - 1) else 0.0) + em(t)
+    // the first 395 points are fitted, the last 6 x rows drive the forecast
+    val (yFit, xFit, xFuture) = (ym.take(395), xm.take(395).map(Array(_)), xm.drop(395).map(Array(_)))
     Seq(
       ("ARIMA(1,0,1), Nelder-Mead", () => ARIMA.fitModel(1, 0, 1, arma).coefficients,
         Seq("0x1.19c745d1db347p3", "0x1.2f4e4906bea2p-2", "0x1.51b5a9af19e6dp-1")),
@@ -122,7 +135,26 @@ class FitSpec extends AnyFunSuite with Matchers {
       ("Holt-Winters multiplicative, grid + Nelder-Mead",
         () => hw(HoltWinters.fitModel(seasonal, 12, "multiplicative")),
         Seq("0x1.b5bbf51f6a7f9p-6", "0x1.17daba341d526p-8", "0x1.033c4d7f0ff26p-1")),
-      ("EWMA, Brent", () => Array(EWMA.fitModel(ses).smoothing), Seq("0x1.8be69cfb4175cp-2")))
+      ("EWMA, Brent", () => Array(EWMA.fitModel(ses).smoothing), Seq("0x1.8be69cfb4175cp-2")),
+      ("ARIMA(2,1,2), Nelder-Mead", () => ARIMA.fitModel(2, 1, 2, arima212).coefficients,
+        Seq("0x1.fffa4a3bd14f1p-3", "-0x1.c6b8ae1e899fcp-3", "0x1.61dc54a4f7f74p-1",
+          "0x1.012fe3c28598ap0", "0x1.e1aa516bb6deep-6")),
+      ("ARIMA(2,1,2) forecast",
+        () => ARIMA.fitModel(2, 1, 2, arima212).forecast(arima212, 6).takeRight(8),
+        Seq("0x1.ccafe11281fb6p6", "0x1.db0b66cf863ddp6", "0x1.dcb6947563af9p6",
+          "0x1.e192463e4bd22p6", "0x1.e57f9a41a67bfp6", "0x1.e8fbefa605215p6",
+          "0x1.ebec9d7236a23p6", "0x1.eeae35109f238p6")),
+      ("ARIMA(0,0,1) without intercept, Brent",
+        () => ARIMA.fitModel(0, 0, 1, ma1, includeIntercept = false).coefficients,
+        Seq("0x1.1e15072dc49b4p-1")),
+      ("ARIMAX(1,0,1; xLag 1), BOBYQA",
+        () => ARIMAX.fitModel(1, 0, 1, yFit, xFit, xLag = 1).params,
+        Seq("0x1.18e54278b7ee7p2", "0x1.79d1a99b62e96p-2", "0x1.060a3945aac3p-1",
+          "0x1.673323543d7dcp0", "0x1.9ebb2241d5e46p-1")),
+      ("ARIMAX(1,0,1; xLag 1) forecast",
+        () => ARIMAX.fitModel(1, 0, 1, yFit, xFit, xLag = 1).forecast(yFit, xFit, xFuture),
+        Seq("0x1.0ba03cf8e3cfcp3", "0x1.fecb239738b46p2", "0x1.b29962d373472p2",
+          "0x1.97e116fa660fp2", "0x1.0ed84526758bdp2", "0x1.8e83d2d1566b4p1")))
   }
 
   for ((name, fit, hex) <- pinned) test(s"pin: $name is bit-identical") {

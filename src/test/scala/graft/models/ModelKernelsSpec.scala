@@ -295,6 +295,27 @@ class ModelKernelsSpec extends AnyFunSuite with Matchers with ScalaFutures {
     fit.xCoefs(0)(1) shouldBe 0.5 +- 0.1
   }
 
+  test("ARIMAX forecast continues a noise-free series from the future x rows") {
+    val (c, phi, b0, b1) = (1.5, 0.6, 2.0, -0.7)
+    val model = ARIMAXModel(1, 0, 0, 1, 1, Array(c, phi, b0, b1))
+    val rand = new MersenneTwister(23L)
+    val x = Array.fill(60)(Array(rand.nextGaussian()))
+    val y = new Array[Double](60)
+    y(0) = 3.0
+    for (t <- 1 until 60) y(t) = c + phi * y(t - 1) + b0 * x(t)(0) + b1 * x(t - 1)(0)
+    val xFuture = Array.fill(5)(Array(rand.nextGaussian()))
+    val fc = model.forecast(y, x, xFuture)
+    fc.length shouldBe 5
+    var prevY = y.last
+    var prevX = x.last(0)
+    for (h <- 0 until 5) {
+      val next = c + phi * prevY + b0 * xFuture(h)(0) + b1 * prevX
+      fc(h) shouldBe next +- 1e-12
+      prevY = next
+      prevX = xFuture(h)(0)
+    }
+  }
+
   test("Cochrane-Orcutt recovers regression under AR(1) errors") {
     val rand = new MersenneTwister(13L)
     val n = 3000
