@@ -27,39 +27,9 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
     (if (hasIntercept) 1 else 0) + p)
   def maCoefs: Array[Double] = coefficients.takeRight(q)
 
-  /** CSS residuals of the (already differenced) series z; e_t = 0 for t < p. */
-  private[models] def cssResiduals(z: Array[Double]): Array[Double] = {
-    val c = intercept
-    val phi = arCoefs
-    val theta = maCoefs
-    val n = z.length
-    val e = new Array[Double](n)
-    var t = p
-    while (t < n) {
-      var pred = c
-      var i = 0
-      while (i < p) { pred += phi(i) * z(t - 1 - i); i += 1 }
-      var j = 0
-      while (j < q) {
-        if (t - 1 - j >= 0) pred += theta(j) * e(t - 1 - j)
-        j += 1
-      }
-      e(t) = z(t) - pred
-      t += 1
-    }
-    e
-  }
-
   /** Conditional-sum-of-squares Gaussian log likelihood on the differenced series. */
-  def logLikelihoodCSS(diffed: Array[Double]): Double = {
-    val e = cssResiduals(diffed)
-    val m = diffed.length - p
-    var ss = 0.0
-    var t = p
-    while (t < diffed.length) { ss += e(t) * e(t); t += 1 }
-    val sigma2 = ss / m
-    -0.5 * m * (math.log(2 * math.Pi * sigma2) + 1.0)
-  }
+  def logLikelihoodCSS(diffed: Array[Double]): Double =
+    -ARIMA.cssObjective(p, q, diffed, hasIntercept).value(coefficients)
 
   /** Log likelihood computed from the raw (undifferenced) series. */
   def logLikelihood(ts: Array[Double]): Double =
@@ -70,9 +40,9 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
 
   /** remove: observed -> innovations (leading p+d values passed through). */
   override def removeTimeDependentEffects(ts: Array[Double]): Array[Double] = {
-    val z = ArrayOps.diffOfOrder(ts, d)
-    val zest = z.drop(d)
-    val e = cssResiduals(zest)
+    val zest = ArrayOps.diffOfOrder(ts, d).drop(d)
+    val e = new Array[Double](zest.length) // CSS: e_t = 0 for t < p
+    ARMA.residuals(coefficients, hasIntercept, p, q, zest, e)
     val out = new Array[Double](ts.length)
     var i = 0
     while (i < ts.length) {
@@ -125,28 +95,8 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
    */
   def forecast(ts: Array[Double], nFuture: Int): Array[Double] = {
     val n = ts.length
-    val z = ArrayOps.diffOfOrder(ts, d)
-    val zest = z.drop(d)
-    val e = cssResiduals(zest)
-    val c = intercept
-    val phi = arCoefs
-    val theta = maCoefs
-    // extended differenced series: observed values then iterated predictions
-    val zext = new Array[Double](zest.length + nFuture)
-    val eext = new Array[Double](zest.length + nFuture)
-    System.arraycopy(zest, 0, zext, 0, zest.length)
-    System.arraycopy(e, 0, eext, 0, e.length)
-    var t = zest.length
-    while (t < zext.length) {
-      var pred = c
-      var i = 0
-      while (i < p) { if (t - 1 - i >= 0) pred += phi(i) * zext(t - 1 - i); i += 1 }
-      var j = 0
-      while (j < q) { if (t - 1 - j >= 0) pred += theta(j) * eext(t - 1 - j); j += 1 }
-      zext(t) = pred
-      eext(t) = 0.0
-      t += 1
-    }
+    val zest = ArrayOps.diffOfOrder(ts, d).drop(d)
+    val (zext, eext) = ARMA.forecast(coefficients, hasIntercept, p, q, zest, nFuture)
     // integrate the full (carried-d ++ zext) array back to levels
     val full = new Array[Double](n + nFuture)
     var i = 0
@@ -157,7 +107,7 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
     val out = new Array[Double](n + nFuture)
     i = 0
     while (i < n) {
-      out(i) = if (i < d || i - d < p) ts(i) else ts(i) - e(i - d)
+      out(i) = if (i < d || i - d < p) ts(i) else ts(i) - eext(i - d)
       i += 1
     }
     while (i < n + nFuture) { out(i) = levels(i); i += 1 }
@@ -206,7 +156,7 @@ case class ARIMAModel(p: Int, d: Int, q: Int, coefficients: Array[Double],
 
   /** AR polynomial 1 − Σ φ_i z^i has all roots outside the unit circle. */
   def isStationary: Boolean = rootsOutsideUnitCircle(arCoefs)
-  /** MA polynomial 1 + Σ θ_j z^j (the sign `cssResiduals` uses) has all
+  /** MA polynomial 1 + Σ θ_j z^j (the sign the ARMA recursion uses) has all
     * roots outside the unit circle. */
   def isInvertible: Boolean = rootsOutsideUnitCircle(maCoefs.map(-_))
 }
@@ -253,6 +203,21 @@ object ARIMA {
     }
   }
 
+  /** The negative CSS log likelihood of ARIMA(p,·,q) on the differenced
+    * series z, as a function of the coefficients: one residual pass into a
+    * scratch array owned by the closure, so an evaluation allocates nothing. */
+  private[models] def cssObjective(p: Int, q: Int, z: Array[Double],
+      includeIntercept: Boolean): MultivariateFunction = {
+    val e = new Array[Double](z.length)
+    params => -gaussianCSS(ARMA.residuals(params, includeIntercept, p, q, z, e), z.length - p)
+  }
+
+  /** CSS Gaussian log likelihood of m conditioned residuals whose squares sum to ss. */
+  private def gaussianCSS(ss: Double, m: Int): Double = {
+    val sigma2 = ss / m
+    -0.5 * m * (math.log(2 * math.Pi * sigma2) + 1.0)
+  }
+
   /**
    * Fit ARIMA(p,d,q) by maximizing the CSS likelihood: a Brent search for a
    * single parameter, otherwise Nelder-Mead inside a penalty box (strictly
@@ -266,14 +231,15 @@ object ARIMA {
     val nParams = (if (includeIntercept) 1 else 0) + p + q
     if (nParams == 0) return ARIMAModel(p, d, q, Array.empty, includeIntercept)
     val init = hannanRissanenInit(z, p, q, includeIntercept)
-    val negLL: MultivariateFunction =
-      params => -ARIMAModel(p, d, q, params, includeIntercept).logLikelihoodCSS(z)
+    val negLL = cssObjective(p, q, z, includeIntercept)
 
     val fitted: Array[Double] =
       if (nParams == 1) {
         val f = Fit.penalized(1e12)(negLL)
         val span = math.max(5.0, math.abs(init(0)) * 3)
-        Fit.brent(a => f.value(Array(a)), init(0) - span, init(0) + span, 1e-9, 1e-11, 2000).point
+        val point = new Array[Double](1)
+        Fit.brent(a => { point(0) = a; f.value(point) }, init(0) - span, init(0) + span,
+          1e-9, 1e-11, 2000).point
       } else {
         val lower = new Array[Double](nParams)
         val upper = new Array[Double](nParams)
@@ -344,5 +310,81 @@ object ARIMA {
       }
     }
     best.map(_._1).getOrElse(fitModel(1, d, 0, ts))
+  }
+}
+
+/**
+ * The one ARMA recursion of ARIMA and ARIMAX, over parameters laid out
+ * [c?] ++ φ(1..p) ++ θ(1..q) ++ β (ARIMAX: `nXCols` blocks of xLag+1). The
+ * prediction at t sums, in this order: c; then, if `x` is given,
+ * Σ_k Σ_l β_{k,l}·x(t−l)(k) summed from 0.0; then φ_i·z(t−1−i); then
+ * θ_j·e(t−1−j); a lag before the series start is skipped. The residual
+ * pass allocates nothing, so a fit's objective reuses one scratch array.
+ * `addTimeDependentEffects` and `sample` keep their own loops: they add
+ * e(t) at another point of the sum.
+ */
+private[models] object ARMA {
+
+  /** e(t) = z(t) − pred(t) for t ≥ max(p, xLag), the CSS start; e below it
+    * is left as it stands (0 in a fresh array). Returns Σ e(t)² in t order. */
+  def residuals(params: Array[Double], hasIntercept: Boolean, p: Int, q: Int,
+      z: Array[Double], e: Array[Double],
+      x: Array[Array[Double]] = null, xLag: Int = 0, nXCols: Int = 0): Double =
+    run(params, hasIntercept, p, q, x, xLag, nXCols, z, e, math.max(p, xLag), z.length,
+      extend = false)
+
+  /** `zest` followed by h iterated predictions (future innovations 0), and
+    * its residuals. `x`, if given, holds rows for all zest.length + h steps. */
+  def forecast(params: Array[Double], hasIntercept: Boolean, p: Int, q: Int,
+      zest: Array[Double], h: Int, x: Array[Array[Double]] = null, xLag: Int = 0,
+      nXCols: Int = 0): (Array[Double], Array[Double]) = {
+    val z = java.util.Arrays.copyOf(zest, zest.length + h)
+    val e = new Array[Double](z.length)
+    run(params, hasIntercept, p, q, x, xLag, nXCols, z, e, math.max(p, xLag), zest.length,
+      extend = false)
+    run(params, hasIntercept, p, q, x, xLag, nXCols, z, e, zest.length, z.length, extend = true)
+    (z, e)
+  }
+
+  /** Over t in [from, until): the residual pass sets e(t) = z(t) − pred and
+    * sums its squares; the extension sets z(t) = pred and e(t) = 0. */
+  private def run(params: Array[Double], hasIntercept: Boolean, p: Int, q: Int,
+      x: Array[Array[Double]], xLag: Int, nXCols: Int, z: Array[Double], e: Array[Double],
+      from: Int, until: Int, extend: Boolean): Double = {
+    val c = if (hasIntercept) params(0) else 0.0
+    val ar = if (hasIntercept) 1 else 0
+    val ma = ar + p
+    val beta = ma + q
+    var ss = 0.0
+    // e(t−1) rides in a local: the recursion is latency-bound, and a store
+    // and reload through the array would sit on its critical path
+    var ePrev = if (from >= 1 && from < until) e(from - 1) else 0.0
+    var t = from
+    while (t < until) {
+      var pred = c
+      if (x != null) {
+        var v = 0.0
+        var k = 0
+        while (k < nXCols) {
+          var l = 0
+          while (l <= xLag) {
+            if (t - l >= 0) v += params(beta + k * (xLag + 1) + l) * x(t - l)(k)
+            l += 1
+          }
+          k += 1
+        }
+        pred += v
+      }
+      var i = 0
+      while (i < p) { if (t - 1 - i >= 0) pred += params(ar + i) * z(t - 1 - i); i += 1 }
+      if (q > 0 && t >= 1) pred += params(ma) * ePrev
+      var j = 1
+      while (j < q) { if (t - 1 - j >= 0) pred += params(ma + j) * e(t - 1 - j); j += 1 }
+      if (extend) { z(t) = pred; ePrev = 0.0 }
+      else { ePrev = z(t) - pred; ss += ePrev * ePrev }
+      e(t) = ePrev
+      t += 1
+    }
+    ss
   }
 }

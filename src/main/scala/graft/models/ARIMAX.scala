@@ -1,5 +1,7 @@
 package graft.models
 
+import org.apache.commons.math3.analysis.MultivariateFunction
+
 /**
  * ARIMAX(p,d,q; xLag): ARIMA with lagged exogenous regressors,
  *   z_t = c + Σ φ_i z_{t-i} + Σ θ_j e_{t-j} + Σ_k Σ_{l=0..xLag} β_{k,l} x_{k,t-l} + e_t
@@ -20,46 +22,9 @@ case class ARIMAXModel(p: Int, d: Int, q: Int, xLag: Int, nXCols: Int,
   def xCoefs(k: Int): Array[Double] =
     params.slice(off + p + q + k * (xLag + 1), off + p + q + (k + 1) * (xLag + 1))
 
-  /** Exogenous contribution at time t (x indexed on the differenced timeline). */
-  private def exog(x: Array[Array[Double]], t: Int): Double = {
-    var v = 0.0
-    var k = 0
-    while (k < nXCols) {
-      val beta = xCoefs(k)
-      var l = 0
-      while (l <= xLag) {
-        if (t - l >= 0) v += beta(l) * x(t - l)(k)
-        l += 1
-      }
-      k += 1
-    }
-    v
-  }
-
-  /** CSS residuals on the differenced target with exogenous terms. */
-  private[models] def cssResiduals(z: Array[Double], x: Array[Array[Double]]): Array[Double] = {
-    val e = new Array[Double](z.length)
-    val start = math.max(p, xLag)
-    var t = start
-    while (t < z.length) {
-      var pred = intercept + exog(x, t)
-      var i = 0
-      while (i < p) { pred += arCoefs(i) * z(t - 1 - i); i += 1 }
-      var j = 0
-      while (j < q) { if (t - 1 - j >= 0) pred += maCoefs(j) * e(t - 1 - j); j += 1 }
-      e(t) = z(t) - pred
-      t += 1
-    }
-    e
-  }
-
-  def css(z: Array[Double], x: Array[Array[Double]]): Double = {
-    val e = cssResiduals(z, x)
-    var s = 0.0
-    var t = math.max(p, xLag)
-    while (t < z.length) { s += e(t) * e(t); t += 1 }
-    s
-  }
+  /** Conditional sum of squares: Σ e_t² over t ≥ max(p, xLag) of the differenced target. */
+  def css(z: Array[Double], x: Array[Array[Double]]): Double =
+    ARIMAX.cssObjective(p, q, z, x, xLag, nXCols, hasIntercept).value(params)
 
   /**
    * Forecast future levels given future exogenous rows. `ts` is the observed
@@ -69,24 +34,9 @@ case class ARIMAXModel(p: Int, d: Int, q: Int, xLag: Int, nXCols: Int,
       xFuture: Array[Array[Double]]): Array[Double] = {
     val n = ts.length
     val h = xFuture.length
-    val z = ArrayOps.diffOfOrder(ts, d)
-    val zest = z.drop(d)
-    val xAll = (x.drop(d) ++ xFuture)
-    val e = cssResiduals(zest, x.drop(d))
-    val zext = new Array[Double](zest.length + h)
-    val eext = new Array[Double](zest.length + h)
-    System.arraycopy(zest, 0, zext, 0, zest.length)
-    System.arraycopy(e, 0, eext, 0, e.length)
-    var t = zest.length
-    while (t < zext.length) {
-      var pred = intercept + exog(xAll, t)
-      var i = 0
-      while (i < p) { if (t - 1 - i >= 0) pred += arCoefs(i) * zext(t - 1 - i); i += 1 }
-      var j = 0
-      while (j < q) { if (t - 1 - j >= 0) pred += maCoefs(j) * eext(t - 1 - j); j += 1 }
-      zext(t) = pred
-      t += 1
-    }
+    val zest = ArrayOps.diffOfOrder(ts, d).drop(d)
+    val (zext, _) = ARMA.forecast(params, hasIntercept, p, q, zest, h, x.drop(d) ++ xFuture,
+      xLag, nXCols)
     val full = new Array[Double](n + h)
     var i = 0
     while (i < d) { full(i) = ts(i); i += 1 }
@@ -96,6 +46,16 @@ case class ARIMAXModel(p: Int, d: Int, q: Int, xLag: Int, nXCols: Int,
 }
 
 object ARIMAX {
+  /** The CSS of ARIMAX(p,·,q; xLag) on the differenced target z and its
+    * aligned rows xz, as a function of the parameters: one residual pass
+    * into a scratch array owned by the closure, so an evaluation allocates
+    * nothing. */
+  private[models] def cssObjective(p: Int, q: Int, z: Array[Double], xz: Array[Array[Double]],
+      xLag: Int, nXCols: Int, includeIntercept: Boolean): MultivariateFunction = {
+    val e = new Array[Double](z.length)
+    params => ARMA.residuals(params, includeIntercept, p, q, z, e, xz, xLag, nXCols)
+  }
+
   /**
    * Fit: ARX least squares for the AR+exogenous block, Hannan-Rissanen-style
    * residual regression for the MA block, then joint CSS refinement by
@@ -128,8 +88,7 @@ object ARIMAX {
     val lower = init.map(v => v - math.max(5.0, math.abs(v) * 10))
     val upper = init.map(v => v + math.max(5.0, math.abs(v) * 10))
     val fitted = Fit.bobyqa(Fit.penalized(1e18)(
-      pm => ARIMAXModel(p, d, q, xLag, nXCols, pm, includeIntercept).css(z, xz)),
-      init, lower, upper, 30000).point
+      cssObjective(p, q, z, xz, xLag, nXCols, includeIntercept)), init, lower, upper, 30000).point
     ARIMAXModel(p, d, q, xLag, nXCols, fitted, includeIntercept)
   }
 }

@@ -15,18 +15,8 @@ case class ARModel(c: Double, coefficients: Array[Double]) extends TimeSeriesMod
   /** residuals: first p entries passed through unchanged so that
     * add ∘ remove = identity. */
   override def removeTimeDependentEffects(ts: Array[Double]): Array[Double] = {
-    val out = new Array[Double](ts.length)
-    var t = 0
-    while (t < ts.length) {
-      if (t < p) out(t) = ts(t)
-      else {
-        var pred = c
-        var i = 0
-        while (i < p) { pred += coefficients(i) * ts(t - 1 - i); i += 1 }
-        out(t) = ts(t) - pred
-      }
-      t += 1
-    }
+    val out = ts.clone()
+    ARMA.residuals(c +: coefficients, hasIntercept = true, p, 0, ts, out)
     out
   }
 

@@ -1,6 +1,7 @@
 package graft.models
 
 import java.io.File
+import java.lang.management.ManagementFactory
 
 import scala.io.Source
 
@@ -162,6 +163,27 @@ class FitSpec extends AnyFunSuite with Matchers {
     withClue(s"got ${got.map(java.lang.Double.toHexString).mkString("Seq(\"", "\", \"", "\")")}: ") {
       got.length shouldBe hex.length
       got.zip(hex).foreach { case (g, h) => assert(g == java.lang.Double.parseDouble(h)) }
+    }
+  }
+
+  // ------------------------------------------------- allocation guard
+
+  test("the ARIMA and ARIMAX objectives allocate nothing per evaluation") {
+    val bean = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    val z = gauss(200, 24L)
+    val x = gauss(200, 25L).map(Array(_))
+    for ((name, f, params) <- Seq(
+        ("ARIMA(2,0,2)", ARIMA.cssObjective(2, 2, z, includeIntercept = true),
+          Array(0.1, 0.3, 0.2, 0.4, 0.1)),
+        ("ARIMAX(1,0,1; xLag 1)", ARIMAX.cssObjective(1, 1, z, x, 1, 1, includeIntercept = true),
+          Array(0.1, 0.3, 0.2, 1.0, 0.5)))) {
+      val first = f.value(params)
+      val before = bean.getCurrentThreadAllocatedBytes
+      var same = 0
+      while (same < 10000 && f.value(params) == first) same += 1
+      val grown = bean.getCurrentThreadAllocatedBytes - before
+      same shouldBe 10000
+      withClue(s"$name: $grown bytes over 10,000 evaluations: ") { grown should be < (1L << 20) }
     }
   }
 
